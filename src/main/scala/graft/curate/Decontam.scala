@@ -153,9 +153,12 @@ object Decontam {
     val perDoc = candRows
       .join(verifiedDup, Seq("gh", "gram"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_dup_grams"))
-    // n_grams is doc-local (distinct grams per doc) — no shuffle at all
+    // n_grams is doc-local (distinct grams per doc) — no shuffle at all;
+    // a null text has no grams: size() of its null array is null (ANSI)
+    // or -1 (legacy), and greatest() maps both to the string path's 0
     val totals = df.select(col(idCol).as("doc_id"),
-      size(array_distinct(tokenNgrams(col(textCol), n))).cast("bigint").as("n_grams"))
+      greatest(size(array_distinct(tokenNgrams(col(textCol), n))), lit(0))
+        .cast("bigint").as("n_grams"))
     totals.join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"))

@@ -3,6 +3,8 @@ package graft.er
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Commit
+
 /** Transitive clustering: connected components over match edges as an
   * iterative DataFrame loop (SURVEY.md §2.8 G6).
   *
@@ -60,11 +62,16 @@ object Clustering {
     * loop's cost at small scale is its FIXED per-round scheduler latency
     * (each round = several shuffles + a signature job; a converged toy
     * graph still pays 3-5 rounds ≈ seconds), while a bounded collect +
-    * union-find is one job and microseconds of CPU. 2M contracted edges
-    * ≈ 32 MB of packed longs on the driver — the same order as the
-    * incremental fold's broadcastMaxEndpoints guard. Exact: union-by-min
-    * with path compression assigns every node the component minimum,
-    * the identical label the star loop converges to. Scale-adaptive, not
+    * union-find is one job and microseconds of CPU. Driver memory paid
+    * at the 2M-edge default: ~32 B per contracted edge for the collected
+    * endpoint arrays plus the sorted node index (~64 MB; the collect's
+    * transient buffers add about as much again), 4 B per node of parent
+    * array, and the returned local relation at ~80 B per (id, cluster)
+    * row — nodes ≤ 2 × edges, so up to ~320 MB when every contracted
+    * edge is its own component, about half that for typical stars.
+    * Exact: union-by-min with path compression assigns every node the
+    * component minimum, the identical label the star loop converges
+    * to. Scale-adaptive, not
     * local-mode-tuned: on a real cluster the threshold bounds driver
     * memory, and corpus-scale edge sets (> threshold after the narrow
     * localContract pass) still take the shuffle loop. Override with
@@ -82,25 +89,46 @@ object Clustering {
     * bit-identical to starsToClusters after a converged star loop. */
   private def driverUnionFind(spark: SparkSession, e: DataFrame): DataFrame = {
     import spark.implicits._
-    val edges = e.select(col("a"), col("b")).as[(Long, Long)].collect()
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
+    // one pair of primitive endpoint arrays per partition: no per-edge
+    // objects on the driver
+    val chunks = e.select(col("a"), col("b")).as[(Long, Long)].mapPartitions { it =>
+      val a = Array.newBuilder[Long]
+      val b = Array.newBuilder[Long]
+      it.foreach { case (x, y) => a += x; b += y }
+      Iterator.single((a.result(), b.result()))
+    }.collect()
+    // dense node index = the sorted distinct endpoints; linking the larger
+    // root index under the smaller keeps every root its component minimum
+    val ids = Array.concat(chunks.flatMap { case (a, b) => Seq(a, b) }.toIndexedSeq: _*)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.indices.foreach { i =>
+      if (i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
-      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
       r
     }
-    edges.foreach { case (a, b) =>
-      if (!parent.contains(a)) parent(a) = a
-      if (!parent.contains(b)) parent(b) = b
-      val ra = find(a); val rb = find(b)
-      if (ra < rb) parent(rb) = ra
-      else if (rb < ra) parent(ra) = rb
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, v)
+    chunks.foreach { case (a, b) =>
+      a.indices.foreach { k =>
+        val ra = find(idx(a(k))); val rb = find(idx(b(k)))
+        if (ra < rb) parent(rb) = ra
+        else if (rb < ra) parent(ra) = rb
+      }
     }
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-    parent.foreachKey { n => out += ((n, find(n))) }
-    spark.createDataset(out.toSeq).toDF("id", "cluster")
+    // parent(i) <= i always, so one ascending pass resolves every root
+    (0 until n).foreach(i => parent(i) = parent(parent(i)))
+    // an index view, not a tuple buffer: createDataset encodes row by row
+    val rows = new IndexedSeq[(Long, Long)] {
+      def length: Int = n
+      def apply(i: Int): (Long, Long) = (ids(i), ids(parent(i)))
+    }
+    spark.createDataset(rows).toDF("id", "cluster")
   }
 
   /** Loud non-convergence warning (round-4 advice): a loop that exhausts
@@ -318,98 +346,60 @@ object Clustering {
     val root = fs.makeQualified(rawRoot)
 
     def roundPath(i: Int) = new Path(root, f"round_$i%05d")
-    // underscore prefix: Spark's file index skips _-prefixed files, so the
-    // manifest never gets picked up as a parquet footer
+    // `_MANIFEST` ("round n h sum converged") is the round's commit
+    // record, written through Commit after the Parquet lands; the
+    // underscore prefix keeps Spark's file index from reading it as a
+    // parquet footer
     def manifestPath(i: Int) = new Path(roundPath(i), "_MANIFEST")
-
-    // _MANIFEST: "round n h converged" — plain text, written AFTER the
-    // Parquet commit so its presence marks the round complete. The write
-    // itself is temp-file + rename: fs.create makes a path visible before
-    // its bytes land, so a crash mid-write must never leave a truncated
-    // manifest that wedges every future resume.
-    def writeManifest(i: Int, sig: (Long, Long, Long), converged: Boolean): Unit = {
-      val tmp = new Path(roundPath(i), "_MANIFEST.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"$i ${sig._1} ${sig._2} ${sig._3} $converged".getBytes("UTF-8"))
-      finally out.close()
-      fs.delete(manifestPath(i), false)
-      if (!fs.rename(tmp, manifestPath(i)))
-        throw new java.io.IOException(s"rename failed for ${manifestPath(i)}")
-    }
-    // A manifest that exists but does not parse (pre-rename crash debris,
-    // manual tampering) counts as an INCOMPLETE round: the scan stops
-    // before it and the round is recomputed.
-    def readManifest(i: Int): Option[(Long, Long, Long, Boolean)] =
-      try {
-        val in = fs.open(manifestPath(i))
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val parts = txt.trim.split(' ')
-        // a pre-round-5 two-component manifest fails this parse (boolean in
-        // the sum slot) and correctly counts as an incomplete round
-        Some((parts(1).toLong, parts(2).toLong, parts(3).toLong, parts(4).toBoolean))
-      } catch { case _: Exception => None }
+    // A manifest that exists but does not parse (manual tampering, a
+    // foreign format) counts as an INCOMPLETE round: the scan passes over
+    // it and the round is recomputed. One that cannot be READ fails the run.
+    def parseManifest(txt: String): Option[(Long, Long, Long, Boolean)] =
+      txt.trim.split(' ') match {
+        case Array(_, n, h, sm, c) =>
+          for (n <- n.toLongOption; h <- h.toLongOption; sm <- sm.toLongOption;
+               c <- c.toBooleanOption) yield (n, h, sm, c)
+        case _ => None
+      }
     def commitRound(i: Int, e: DataFrame, prevSig: Option[(Long, Long, Long)]): (DataFrame, (Long, Long, Long), Boolean) = {
       e.write.mode("overwrite").parquet(roundPath(i).toString)
       val reread = spark.read.parquet(roundPath(i).toString)
       val sig = edgeSig(reread)
       val converged = prevSig.contains(sig)
-      writeManifest(i, sig, converged)
+      Commit.write(fs, manifestPath(i), s"$i ${sig._1} ${sig._2} ${sig._3} $converged")
       (reread, sig, converged)
     }
+    // best effort: a failed delete leaves garbage, never a wrong answer
+    def dropDir(p: Path): Unit =
+      try fs.delete(p, true) catch { case _: java.io.IOException => () }
 
-    // resume point: the last round whose MANIFEST exists (a crash between
-    // Parquet write and manifest leaves the round incomplete → recomputed)
     // Prune SIBLING namespaces: under one caller-owned dir, a different
     // input signature means a superseded upstream graph — its rounds can
     // never be resumed again and would otherwise accumulate one edge-set
     // Parquet copy per round per historical run.
-    try {
-      val parent = root.getParent
-      if (fs.exists(parent)) fs.listStatus(parent).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("cc_") && st.getPath != root)
-          fs.delete(st.getPath, true)
-      }
-    } catch { case _: Exception => () }
+    Commit.list(fs, root.getParent).foreach { st =>
+      if (st.isDirectory && st.getPath.getName.startsWith("cc_") && st.getPath != root)
+        dropDir(st.getPath)
+    }
 
     // resume point: the HIGHEST round with a COMPLETE (present + parsable)
     // manifest — found by listing, not by contiguous probing, because
-    // post-convergence pruning deletes the superseded earlier rounds
-    var last = -1
-    var lastManifest: Option[(Long, Long, Long, Boolean)] = None
-    if (fs.exists(root)) {
-      val rounds = fs.listStatus(root).flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("round_"))
-          scala.util.Try(n.stripPrefix("round_").toInt).toOption
-        else None
-      }.sorted.reverse
-      // no maxIter filter here: a converged snapshot from a HIGHER-budget
-      // earlier run is still the exact answer — skipping it (post-pruning,
-      // with the lower rounds gone) would force a from-scratch recompute
-      // that may not even converge within the smaller budget
-      var i = 0
-      while (i < rounds.length && lastManifest.isEmpty) {
-        val r = rounds(i)
-        if (fs.exists(manifestPath(r))) {
-          val m = readManifest(r)
-          if (m.isDefined) { last = r; lastManifest = m }
-        }
-        i += 1
-      }
-    }
+    // post-convergence pruning deletes the superseded earlier rounds.
+    // No maxIter filter: a converged snapshot from a HIGHER-budget
+    // earlier run is still the exact answer — skipping it (post-pruning,
+    // with the lower rounds gone) would force a from-scratch recompute
+    // that may not even converge within the smaller budget.
+    val rounds = Commit.numbered(fs, root, "round_")
+    val resume = rounds.iterator.flatMap { case (r, p) =>
+      Commit.read(fs, new Path(p, "_MANIFEST")).flatMap(parseManifest).map(r.toInt -> _)
+    }.nextOption()
+    val last = resume.fold(-1)(_._1)
 
     // Crash/corruption debris ABOVE the resume point (rounds with missing
     // or unparsable manifests) is deleted now — BEFORE any new round is
     // written: the scan will never use it, and a stale full edge-set copy
     // must not survive every prune.
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("round_"))
-        scala.util.Try(n.stripPrefix("round_").toInt).toOption.foreach { r =>
-          if (r > last) { try fs.delete(st.getPath, true) catch { case _: Exception => () } }
-        }
-    }
+    rounds.foreach { case (r, p) => if (r > last) dropDir(p) }
 
     var iter = 0
     var prevSig: (Long, Long, Long) = (-1L, -1L, -1L)
@@ -419,7 +409,7 @@ object Clustering {
       val (e0, sig0, _) = commitRound(0, localContract(norm), None)
       e = e0; prevSig = sig0
     } else {
-      val (n, h, sm, c) = lastManifest.get
+      val (n, h, sm, c) = resume.get._2
       e = spark.read.parquet(roundPath(last).toString)
       prevSig = (n, h, sm); converged = c; iter = last
     }
@@ -442,11 +432,7 @@ object Clustering {
       // delete the superseded earlier rounds so the namespace holds one
       // edge-set copy, not O(log n) of them.
       if (converged) {
-        var i = 0
-        while (i < iter) {
-          try fs.delete(roundPath(i), true) catch { case _: Exception => () }
-          i += 1
-        }
+        (0 until iter).foreach(i => dropDir(roundPath(i)))
       }
       // EAGER localCheckpoint: the returned cluster table must be
       // self-contained — a later call on this dir prunes snapshot files

@@ -1,21 +1,22 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.Commit
 
 /** Checkpoint-resumable stage orchestration with per-partition lineage +
   * metrics (BASELINE.json north_rule).
   *
   * Each stage materializes to `<root>/<stage>/data` (Parquet) plus a
-  * `manifest.json` written LAST and atomically (write temp + move): the
-  * manifest is the commit record — a stage directory without one is
-  * garbage from a killed run and is recomputed. This emulates the
-  * Iceberg snapshot+manifest layout (no Iceberg runtime jar ships in this
-  * sandbox — SURVEY §4.3); the directory naming stays swappable for a real
-  * catalog.
+  * `manifest.json` written LAST through [[graft.util.Commit]] (temp file +
+  * rename on the root's Hadoop FileSystem, so local, HDFS and object
+  * stores alike): the manifest is the commit record — a stage directory
+  * without one is garbage from a killed run and is recomputed. This
+  * emulates the Iceberg snapshot+manifest layout (no Iceberg runtime jar
+  * is on the classpath — SURVEY §4.3); the directory naming stays
+  * swappable for a real catalog.
   *
   * Manifest contents: stage name, row count, partition count, per-partition
   * row counts (the partition lineage), upstream stage names, wall-clock,
@@ -31,42 +32,31 @@ object Pipeline {
   def manifestPath(root: String, stage: String) = s"$root/$stage/manifest.json"
   def dataPath(root: String, stage: String) = s"$root/$stage/data"
 
-  def isComplete(root: String, stage: String): Boolean =
-    Files.exists(Paths.get(manifestPath(root, stage)))
-
-  private def manifestFingerprint(root: String, stage: String): String = {
-    val p = Paths.get(manifestPath(root, stage))
-    if (!Files.exists(p)) "absent"
-    else {
-      val bytes = Files.readAllBytes(p)
-      java.lang.Long.toHexString(
-        bytes.foldLeft(0xCBF29CE484222325L)((h, b) => (h ^ (b & 0xFF)) * 0x100000001B3L))
-    }
-  }
+  private def fingerprint(manifest: Option[String]): String =
+    manifest.fold("absent")(m => java.lang.Long.toHexString(
+      m.getBytes("UTF-8").foldLeft(0xCBF29CE484222325L)((h, b) => (h ^ (b & 0xFF)) * 0x100000001B3L)))
 
   /** Run (or resume) one stage: if a committed snapshot exists whose
     * recorded upstream fingerprints still match, read it back; otherwise
-    * compute, write data, then commit the manifest atomically. */
+    * compute, write data, then commit the manifest. */
   def stage(
       spark: SparkSession,
       root: String,
       name: String,
       upstream: Seq[String] = Nil)(compute: => DataFrame): StageResult = {
-    val mPath = manifestPath(root, name)
+    val mPath = new Path(manifestPath(root, name))
     val dPath = dataPath(root, name)
-    val upstreamFps = upstream.map(u => u -> manifestFingerprint(root, u))
+    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val upstreamFps = upstream.map(u =>
+      u -> fingerprint(Commit.read(fs, new Path(manifestPath(root, u)))))
 
-    if (Files.exists(Paths.get(mPath))) {
-      val manifest = new String(Files.readAllBytes(Paths.get(mPath)), StandardCharsets.UTF_8)
-      val stillValid = upstreamFps.forall { case (u, fp) =>
-        manifest.contains(s""""${esc(u)}":"$fp"""")
-      }
-      if (stillValid) {
-        return StageResult(name, spark.read.parquet(dPath), fromSnapshot = true)
-      }
-      // upstream changed → invalidate
-      Files.delete(Paths.get(mPath))
-    }
+    val committed = Commit.read(fs, mPath)
+    val stillValid = committed.exists(m => upstreamFps.forall { case (u, fp) =>
+      m.contains(s""""${esc(u)}":"$fp"""")
+    })
+    if (stillValid) return StageResult(name, spark.read.parquet(dPath), fromSnapshot = true)
+    // upstream changed → invalidate
+    if (committed.isDefined) fs.delete(mPath, false)
 
     val t0 = System.nanoTime()
     val df = compute
@@ -88,10 +78,7 @@ object Pipeline {
       s"""{"stage":"${esc(name)}","rows":$rows,"partitions":${perPart.length},""" +
         s""""partition_rows":[${perPart.mkString(",")}],""" +
         f""""wall_sec":$sec%.3f,"upstream":$upstreamJson}"""
-    val tmp = Paths.get(mPath + ".tmp")
-    Files.createDirectories(tmp.getParent)
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(mPath), StandardCopyOption.ATOMIC_MOVE)
+    Commit.write(fs, mPath, manifest)
     StageResult(name, written, fromSnapshot = false)
   }
 }

@@ -192,16 +192,15 @@ object Streaming {
     *     min-label proof; StreamingSpec checks two-wave == batch).
     *   - Versions are keyed by Structured Streaming's `batchId`, so a
     *     replayed batch (crash between sink commit and offset-log commit)
-    *     is detected via the `_LATEST` pointer and skipped — the fold is
+    *     is detected as "already committed" and skipped — the fold is
     *     also idempotent by CC semantics (already-merged edges collapse to
     *     self-loops), so even a missed skip cannot corrupt state.
-    *   - `_LATEST` is temp-file + rename (same protocol as the CC round
-    *     manifests); a crash before the pointer delete leaves `_LATEST` on
-    *     the previous version (which is why that dir is retained and only
-    *     OLDER ones are pruned), and a crash between the delete and the
-    *     rename is recovered by readLatest's fallback scan over the
-    *     per-version `_GRAFT_COMMITTED` markers — no crash window loses
-    *     state (StreamingSpec "recovers from a missing _LATEST pointer").
+    *   - A version is committed by its `_PARTS` manifest, written last
+    *     through [[graft.util.Commit]]: a crash anywhere before it leaves
+    *     an in-flight dir that readers ignore and the re-run overwrites;
+    *     a failed read or listing fails the fold instead of being taken
+    *     for "no state" (StateCommitFaultSpec injects a fault at every
+    *     commit-protocol call).
     *
     * Scale shape: per micro-batch cost = batch-scale CC + one narrow read
     * + one narrow write of the node-scale assignment (the broadcast-probe
@@ -253,162 +252,95 @@ object Streaming {
       name: String, content: DataFrame, nRanges: Int, touchedRanges: Seq[Long],
       full: Boolean, keyCol: String, maxReferencedVersions: Int = 16) extends PartWrite
 
-  /** Versioned Parquet state-at-rest shared by the streaming maintenance
-    * sinks (cluster and source-cap folds): batchId-keyed version dirs, an
-    * atomic `_LATEST` pointer (temp file + rename, the CC-manifest
-    * protocol), previous version retained as the recovery target for a
-    * crash before the pointer rename, older versions pruned (minus any
-    * version still referenced by a delta chain or a ranged holder — the
-    * `_PARTS` manifest is the reference root). One implementation so the
-    * commit protocol cannot drift between sinks. */
+  /** Versioned Parquet state-at-rest shared by every streaming
+    * maintenance sink: one dir `v_<batchId>` per fold, each relation a
+    * part subdir. The parts land first; the `_PARTS` manifest (how each
+    * part resolves: full / delta chain / ranged holders) is written LAST
+    * through [[graft.util.Commit]] and IS the commit. The newest committed
+    * version is the highest-numbered dir holding a manifest; a dir without
+    * one is an in-flight write, ignored by readers and pruned by the next
+    * commit. The previous version is retained (an in-progress reader of it
+    * keeps its files); older versions are pruned unless the new or
+    * previous manifest still references them. */
   private[graft] final class VersionedState(spark: SparkSession, stateDir: String) {
     import org.apache.hadoop.fs.Path
+    import graft.util.Commit
     private val fs =
       new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     private val root = fs.makeQualified(new Path(stateDir))
-    private val latestPath = new Path(root, "_LATEST")
 
-    def versionPath(v: Long): String = new Path(root, f"v_$v%012d").toString
+    private def versionPath(v: Long): String = new Path(root, f"v_$v%012d").toString
+    private def partPath(v: Long, name: String) = s"${versionPath(v)}/$name"
+    private def rangePath(v: Long, name: String, k: Long) = s"${partPath(v, name)}/_r=$k"
+    private def manifestPath(v: Long) = new Path(new Path(versionPath(v)), "_PARTS")
 
-    /** Per-version commit marker, written AFTER the Parquet version lands
-      * and BEFORE the pointer swap: a version dir without it is an
-      * in-flight write and never a recovery target. Underscore-prefixed so
-      * Spark's file index skips it (the CC `_MANIFEST` rule). Our own
-      * marker, not Spark's `_SUCCESS` — that one is config-dependent
-      * (mapreduce …marksuccessfuljobs) and lands mid-commit. */
-    private def markerPath(v: Long) = new Path(new Path(versionPath(v)), "_GRAFT_COMMITTED")
-
-    def readLatest(): Option[Long] = {
-      val viaPointer =
-        try {
-          val in = fs.open(latestPath)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          Some(txt.trim.toLong)
-        } catch { case _: Exception => None }
-      // No pointer: either a fresh dir (no versions → None) or a crash
-      // landed between the pointer delete and the rename in commit() —
-      // fall back to the newest COMPLETE (marker-carrying) version instead
-      // of silently restarting from empty state, which would make the next
-      // fold treat its batch as the first one and prune every retained
-      // version (total state loss).
-      viaPointer.orElse {
-        try {
-          if (!fs.exists(root)) None
-          else {
-            val committed = fs.listStatus(root).flatMap { st =>
-              val n = st.getPath.getName
-              if (st.isDirectory && n.startsWith("v_"))
-                scala.util.Try(n.drop(2).toLong).toOption
-                  .filter(v => fs.exists(markerPath(v)))
-              else None
-            }
-            if (committed.isEmpty) None else Some(committed.max)
-          }
-        } catch { case _: Exception => None }
+    /** The newest committed version; None before the first commit. */
+    def readLatest(): Option[Long] =
+      Commit.numbered(fs, root, "v_").collectFirst {
+        case (v, dir) if fs.exists(new Path(dir, "_PARTS")) => v
       }
+
+    /** Resolve a part at version `v` through its manifest entry. */
+    def readPart(v: Long, name: String): DataFrame = entry(v, name) match {
+      case FullE(ver) => spark.read.parquet(partPath(ver, name))
+      case ChainE(base, deltas, _) => spark.read.parquet((base +: deltas).map(partPath(_, name)): _*)
+      case RangedE(_, holders) =>
+        spark.read.parquet(
+          holders.toSeq.sortBy(_._1).map { case (k, hv) => rangePath(hv, name, k) }: _*)
     }
 
-    def read(v: Long): DataFrame = spark.read.parquet(versionPath(v))
-
-    /** Latest committed state, or an empty frame of `schema` before the
-      * first commit. */
-    def current(schema: StructType): DataFrame = readLatest() match {
-      case Some(v) => read(v)
+    /** The part `name` at the newest version, or an empty frame of
+      * `schema` before the first commit. */
+    def latestPart(name: String, schema: StructType): DataFrame = readLatest() match {
+      case Some(v) => readPart(v, name)
       case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-
-    /** Write `df` as version `batchId` (+ commit marker), advance
-      * `_LATEST`, prune versions older than the previous one. The pointer
-      * swap is delete + rename — not atomic on its own, which is why
-      * readLatest() recovers from the marker scan when the pointer is
-      * missing: every crash window leaves either the old pointer (version
-      * re-foldable / skippable) or a marker-complete newest version. */
-    def commit(batchId: Long, df: DataFrame, prev: Option[Long]): Unit = {
-      df.write.mode("overwrite").parquet(versionPath(batchId))
-      sealCommit(batchId, prev)
-    }
-
-    /** Multi-relation version: each part lands as a SUBDIR of the
-      * version dir, the marker seals them all together, so a crash
-      * mid-write can never expose half a version (a version dir without
-      * the marker is never a recovery target). */
-    def commitParts(batchId: Long, parts: Seq[(String, DataFrame)],
-        prev: Option[Long]): Unit = {
-      parts.foreach { case (name, df) =>
-        df.write.mode("overwrite")
-          .parquet(new Path(new Path(versionPath(batchId)), name).toString)
-      }
-      sealCommit(batchId, prev)
-    }
-
-    /** Resolve a part at version `v` through its `_PARTS` manifest when
-      * one exists (full / delta-chain / ranged entries); a version dir
-      * without a manifest is the legacy all-full layout and reads the
-      * plain subdir. */
-    def readPart(v: Long, name: String): DataFrame =
-      readManifest(v).flatMap(_.get(name)) match {
-        case None =>
-          spark.read.parquet(new Path(new Path(versionPath(v)), name).toString)
-        case Some(FullE(ver)) =>
-          spark.read.parquet(new Path(new Path(versionPath(ver)), name).toString)
-        case Some(ChainE(base, deltas, _)) =>
-          spark.read.parquet(
-            (base +: deltas).map(d => new Path(new Path(versionPath(d)), name).toString): _*)
-        case Some(RangedE(_, holders)) =>
-          spark.read.parquet(holders.toSeq.sortBy(_._1).map { case (k, hv) =>
-            new Path(new Path(new Path(versionPath(hv)), name), s"_r=$k").toString
-          }: _*)
-      }
 
     /** Pruned read of specific ranges of a RANGED part (only the touched
       * leaf dirs are listed — the partition-pruned read the fold's
-      * passthrough needs); None when the part is not ranged at `v`
-      * (legacy/full layout — the caller falls back to a filtered scan). */
-    def readPartRanges(v: Long, name: String, ranges: Seq[Long]): Option[DataFrame] =
-      readManifest(v).flatMap(_.get(name)) match {
-        case Some(RangedE(_, holders)) =>
-          val paths = ranges.flatMap(k => holders.get(k).map(hv =>
-            new Path(new Path(new Path(versionPath(hv)), name), s"_r=$k").toString))
-          Some(
-            if (paths.isEmpty)
-              readPart(v, name).limit(0)
-            else spark.read.parquet(paths: _*))
-        case _ => None
-      }
+      * passthrough needs). Callers check [[isRangedWith]] first. */
+    def readPartRanges(v: Long, name: String, ranges: Seq[Long]): DataFrame = entry(v, name) match {
+      case RangedE(_, holders) =>
+        val paths = ranges.flatMap(k => holders.get(k).map(rangePath(_, name, k)))
+        if (paths.isEmpty) readPart(v, name).limit(0) else spark.read.parquet(paths: _*)
+      case e => throw new IllegalStateException(s"part $name of $stateDir v=$v is not ranged: $e")
+    }
 
     /** Whether `name` is a RANGED part at version `v` with this range
-      * count (a fold may only inherit untouched ranges when it is). */
+      * count (a fold may only inherit untouched ranges when it is; a
+      * changed range count takes the one-time full rescale write). */
     def isRangedWith(v: Long, name: String, nRanges: Int): Boolean =
-      readManifest(v).flatMap(_.get(name)) match {
-        case Some(RangedE(r, _)) => r == nRanges
+      entry(v, name) match {
+        case RangedE(r, _) => r == nRanges
         case _ => false
       }
 
-    // ---- the `_PARTS` manifest (round-7 delta state) --------------------
-    private def manifestPath2(v: Long) = new Path(new Path(versionPath(v)), "_PARTS")
+    private def entry(v: Long, name: String): Entry =
+      readManifest(v).getOrElse(name,
+        throw new IllegalStateException(s"no part $name in $stateDir v=$v"))
 
-    private def readManifest(v: Long): Option[Map[String, Entry]] =
-      try {
-        val in = fs.open(manifestPath2(v))
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        Some(txt.split('\n').filter(_.nonEmpty).map { line =>
-          val t = line.split(' ')
-          t(0) match {
-            case "full" => t(1) -> (FullE(t(2).toLong): Entry)
-            case "chain" =>
-              t(1) -> (ChainE(t(2).toLong, t.drop(4).map(_.toLong).toSeq, t(3).toInt): Entry)
-            case "ranged" =>
-              t(1) -> (RangedE(t(2).toInt, t.drop(3).map { kv =>
-                val p = kv.split(':'); p(0).toLong -> p(1).toLong
-              }.toMap): Entry)
-          }
-        }.toMap)
-      } catch { case _: Exception => None }
+    /** The manifest of a committed version — strict: a version found by
+      * [[readLatest]] has one, so any failure here fails the caller. */
+    private def readManifest(v: Long): Map[String, Entry] = {
+      val txt = Commit.read(fs, manifestPath(v)).getOrElse(
+        throw new java.io.FileNotFoundException(s"${manifestPath(v)} vanished"))
+      txt.split('\n').filter(_.nonEmpty).map { line =>
+        val t = line.split(' ')
+        t(0) match {
+          case "full" => t(1) -> (FullE(t(2).toLong): Entry)
+          case "chain" =>
+            t(1) -> (ChainE(t(2).toLong, t.drop(4).map(_.toLong).toSeq, t(3).toInt): Entry)
+          case "ranged" =>
+            t(1) -> (RangedE(t(2).toInt, t.drop(3).map { kv =>
+              val p = kv.split(':'); p(0).toLong -> p(1).toLong
+            }.toMap): Entry)
+        }
+      }.toMap
+    }
 
-    private def writeManifest(v: Long, m: Map[String, Entry]): Unit = {
-      val txt = m.toSeq.sortBy(_._1).map {
+    private def manifestText(m: Map[String, Entry]): String =
+      m.toSeq.sortBy(_._1).map {
         case (n, FullE(ver)) => s"full $n $ver"
         case (n, ChainE(base, deltas, ce)) =>
           (Seq("chain", n, base.toString, ce.toString) ++ deltas.map(_.toString)).mkString(" ")
@@ -416,71 +348,49 @@ object Streaming {
           (Seq("ranged", n, r.toString) ++
             holders.toSeq.sorted.map { case (k, hv) => s"$k:$hv" }).mkString(" ")
       }.mkString("\n")
-      val tmp = new Path(new Path(versionPath(v)), "_PARTS.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(txt.getBytes("UTF-8")) finally out.close()
-      fs.delete(manifestPath2(v), false)
-      if (!fs.rename(tmp, manifestPath2(v)))
-        throw new java.io.IOException(s"rename failed for ${manifestPath2(v)}")
-    }
 
-    /** Manifest-driven commit: write each part per its [[PartWrite]]
-      * kind, record the resolution manifest, seal (marker + pointer),
-      * prune everything the new AND previous manifests no longer
-      * reference. Logs the bytes written this version vs the resolved
-      * state-at-rest — the evidence that per-fold write volume tracks
-      * the batch. */
+    /** Write each part per its [[PartWrite]] kind, commit the version by
+      * writing its manifest, then prune everything the new AND previous
+      * manifests no longer reference. Logs the bytes written this version
+      * — the evidence that per-fold write volume tracks the batch. */
     def commitWrites(batchId: Long, writes: Seq[PartWrite], prev: Option[Long]): Unit = {
-      val prevManifest: Map[String, Entry] =
-        prev.flatMap(readManifest).getOrElse(
-          // legacy layout: treat every existing subdir as a full part of
-          // the previous version so chains/inheritance can build on it
-          prev.map { pv =>
-            try fs.listStatus(new Path(versionPath(pv)))
-              .filter(st => st.isDirectory)
-              .map(st => st.getPath.getName -> (FullE(pv): Entry)).toMap
-            catch { case _: Exception => Map.empty[String, Entry] }
-          }.getOrElse(Map.empty))
-      def partPath(name: String) = new Path(new Path(versionPath(batchId)), name).toString
+      val prevManifest = prev.map(readManifest).getOrElse(Map.empty[String, Entry])
       var manifest = prevManifest
       writes.foreach {
         case FullWrite(name, df) =>
-          df.write.mode("overwrite").parquet(partPath(name))
+          df.write.mode("overwrite").parquet(partPath(batchId, name))
           manifest += name -> FullE(batchId)
         case DeltaWrite(name, delta, compactEvery) =>
           prevManifest.get(name) match {
             case Some(ChainE(base, deltas, _)) if deltas.size + 1 < compactEvery =>
-              delta.write.mode("overwrite").parquet(partPath(name))
+              delta.write.mode("overwrite").parquet(partPath(batchId, name))
               manifest += name -> ChainE(base, deltas :+ batchId, compactEvery)
             case Some(e @ ChainE(_, _, _)) =>
               // chain at budget: compact — one full rewrite every
               // compactEvery folds (amortized O(state/compactEvery))
-              val resolved = spark.read.parquet(
-                (e.base +: e.deltas).map(d =>
-                  new Path(new Path(versionPath(d)), name).toString): _*)
-              resolved.unionByName(delta).write.mode("overwrite").parquet(partPath(name))
+              val resolved = spark.read.parquet((e.base +: e.deltas).map(partPath(_, name)): _*)
+              resolved.unionByName(delta).write.mode("overwrite").parquet(partPath(batchId, name))
               manifest += name -> FullE(batchId)
             case Some(FullE(base)) =>
-              delta.write.mode("overwrite").parquet(partPath(name))
+              delta.write.mode("overwrite").parquet(partPath(batchId, name))
               manifest += name -> ChainE(base, Seq(batchId), compactEvery)
             case _ =>
               // first commit of this part: the delta IS the relation
-              delta.write.mode("overwrite").parquet(partPath(name))
+              delta.write.mode("overwrite").parquet(partPath(batchId, name))
               manifest += name -> FullE(batchId)
           }
         case RangedWrite(name, content, nRanges, touchedRanges, full, keyCol, maxRefs) =>
           def listLanded(): Set[Long] =
-            try fs.listStatus(new Path(partPath(name)))
+            fs.listStatus(new Path(partPath(batchId, name)))
               .map(_.getPath.getName).filter(_.startsWith("_r="))
               .map(_.stripPrefix("_r=").toLong).toSet
-            catch { case _: Exception => Set.empty[Long] }
           val prevHolders = prevManifest.get(name) match {
             case Some(RangedE(r, holders)) if r == nRanges && !full => holders
             case _ => Map.empty[Long, Long] // bootstrap / rescale / forced full
           }
           val wouldHold = prevHolders ++ touchedRanges.map(_ -> batchId)
           if (full || prevHolders.isEmpty) {
-            content.write.partitionBy("_r").mode("overwrite").parquet(partPath(name))
+            content.write.partitionBy("_r").mode("overwrite").parquet(partPath(batchId, name))
             manifest += name -> RangedE(nRanges, listLanded().map(_ -> batchId).toMap)
           } else if (wouldHold.values.toSet.size > maxRefs) {
             // too many live holder versions: compact — resolve the
@@ -493,50 +403,31 @@ object Streaming {
               if (untouched.isEmpty) content
               else {
                 val prevRows = spark.read.parquet(untouched.map { case (k, hv) =>
-                  new Path(new Path(new Path(versionPath(hv)), name), s"_r=$k").toString
+                  rangePath(hv, name, k)
                 }: _*).withColumn("_r", pmod(xxhash64(col(keyCol)), lit(nRanges.toLong)))
                 content.unionByName(prevRows)
               }
-            fullDf.write.partitionBy("_r").mode("overwrite").parquet(partPath(name))
+            fullDf.write.partitionBy("_r").mode("overwrite").parquet(partPath(batchId, name))
             manifest += name -> RangedE(nRanges, listLanded().map(_ -> batchId).toMap)
           } else {
-            content.write.partitionBy("_r").mode("overwrite").parquet(partPath(name))
+            content.write.partitionBy("_r").mode("overwrite").parquet(partPath(batchId, name))
             val landed = listLanded()
             manifest += name -> RangedE(nRanges,
               prevHolders ++ touchedRanges.toSet.intersect(landed).map(_ -> batchId))
           }
       }
-      writeManifest(batchId, manifest)
-      val alsoKeep = manifest.values.flatMap(_.refs).toSet ++
+      Commit.write(fs, manifestPath(batchId), manifestText(manifest))
+      val keep = Set(batchId) ++ prev ++ manifest.values.flatMap(_.refs) ++
         prevManifest.values.flatMap(_.refs)
-      sealCommit(batchId, prev, alsoKeep)
+      Commit.numbered(fs, root, "v_").foreach { case (v, dir) =>
+        if (!keep.contains(v)) fs.delete(dir, true)
+      }
       try {
         val written = fs.getContentSummary(new Path(versionPath(batchId))).getLength
         System.err.println(s"[graft.streaming] state $stateDir v=$batchId: " +
           s"wrote $written bytes this version " +
           s"(${writes.map(w => w.name + "=" + w.getClass.getSimpleName).mkString(", ")})")
-      } catch { case _: Exception => () }
-    }
-
-    /** Marker + pointer swap + prune — the shared tail of every commit
-      * shape. `alsoKeep`: versions still referenced by a delta chain or
-      * ranged holder (from the new or previous manifest). */
-    private def sealCommit(batchId: Long, prev: Option[Long],
-        alsoKeep: Set[Long] = Set.empty): Unit = {
-      val mk = fs.create(markerPath(batchId), true)
-      try mk.write("ok".getBytes("UTF-8")) finally mk.close()
-      val tmp = new Path(root, "_LATEST.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-      fs.delete(latestPath, false)
-      if (!fs.rename(tmp, latestPath))
-        throw new java.io.IOException(s"rename failed for $latestPath")
-      val keep = Set(batchId) ++ prev ++ alsoKeep
-      fs.listStatus(root).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("v_") && !keep.contains(n.drop(2).toLong))
-          fs.delete(st.getPath, true)
-      }
+      } catch { case _: java.io.IOException => () }
     }
   }
 
@@ -583,7 +474,7 @@ object Streaming {
         commitFull(graft.er.Clustering.assign(
           spark, e.select(explode(array(col("a"), col("b"))).as("id")).distinct(), e))
       case Some(v) =>
-        val standing = currentClusters(spark, stateDir)
+        val standing = vs.readPart(v, "assign")
         val r = graft.er.Clustering.incrementalClustersWithDelta(spark, standing, e)
         if (r.changedIsFull || !vs.isRangedWith(v, "assign", nR)) commitFull(r.assignment)
         else {
@@ -593,8 +484,7 @@ object Streaming {
           val changed = withAssignRange(r.changed, nR).localCheckpoint(true)
           val touched = changed.select("_r").distinct()
             .collect().map(_.getLong(0)).toSeq.sorted
-          val prevRows = withAssignRange(
-            vs.readPartRanges(v, "assign", touched).get, nR)
+          val prevRows = withAssignRange(vs.readPartRanges(v, "assign", touched), nR)
             .join(broadcast(changed.select("id")), Seq("id"), "left_anti")
           vs.commitWrites(batchId,
             Seq(RangedWrite("assign", prevRows.unionByName(changed), nR,
@@ -604,21 +494,10 @@ object Streaming {
   }
 
   /** The standing assignment a [[streamingClusters]] query has built so
-    * far (empty two-column frame before the first fold). Resolves the
-    * ranged layout through the manifest; a pre-manifest (legacy) state
-    * dir reads the version root. */
-  def currentClusters(spark: SparkSession, stateDir: String): DataFrame = {
-    val vs = new VersionedState(spark, stateDir)
-    vs.readLatest() match {
-      case Some(v) =>
-        try vs.readPart(v, "assign")
-        catch { case _: Exception => vs.read(v) } // legacy root-relation layout
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("id", LongType), StructField("cluster", LongType))))
-    }
-  }
+    * far (empty two-column frame before the first fold). */
+  def currentClusters(spark: SparkSession, stateDir: String): DataFrame =
+    new VersionedState(spark, stateDir).latestPart("assign",
+      StructType(Seq(StructField("id", LongType), StructField("cluster", LongType))))
 
   /** Streaming PER-SOURCE CAP MAINTENANCE — the streaming twin of
     * [[graft.curate.SourceCap.sourceCap]]: documents stream in and every
@@ -667,16 +546,17 @@ object Streaming {
       graft.curate.SourceCap.keyed(batch, idCol, srcCol), n)
     val merged = prev match {
       case None => partial
-      case Some(v) => vs.read(v).unionByName(partial)
+      case Some(v) => vs.readPart(v, "kept").unionByName(partial)
     }
-    vs.commit(batchId, graft.curate.SourceCap.topNPerSource(merged, n), prev)
+    vs.commitWrites(batchId,
+      Seq(FullWrite("kept", graft.curate.SourceCap.topNPerSource(merged, n))), prev)
   }
 
   /** The kept set a [[streamingSourceCap]] query has built so far:
     * (id, source, h), at most n rows per source (empty before the first
     * fold). */
   def currentSourceCap(spark: SparkSession, stateDir: String): DataFrame =
-    new VersionedState(spark, stateDir).current(
+    new VersionedState(spark, stateDir).latestPart("kept",
       StructType(Seq(
         StructField("id", LongType),
         StructField("source", StringType),
@@ -685,8 +565,8 @@ object Streaming {
   /** Streaming dup-ngram maintenance (the dc_dup_ngrams_incr fold as a
     * foreachBatch sink): documents stream in; each micro-batch folds into
     * the standing gram-frequency index (grams / freq / stats — one
-    * multi-part version per batch, sealed atomically by the shared
-    * marker, so a crash can never expose half an index). Dup flips are
+    * multi-part version per batch, committed by its one manifest, so a
+    * crash can never expose half an index). Dup flips are
     * monotone, so the fold touches only batch-carried grams. */
   def streamingDupNgrams(
       docs: DataFrame,
@@ -755,8 +635,8 @@ object Streaming {
             vs.readPart(v, "stats"), n),
           batch, idCol, textCol)
         if (!vs.isRangedWith(v, "stats", nR)) {
-          // legacy/rescaled stats layout: one full ranged write, after
-          // which folds inherit untouched ranges again
+          // range count changed: one full rescale write, after which
+          // folds inherit untouched ranges again
           vs.commitWrites(batchId, Seq(
             DeltaWrite("grams", fold.batchGrams),
             FullWrite("freq", fold.index.freq),
@@ -767,7 +647,7 @@ object Streaming {
           val changed = withR(fold.changedStats).localCheckpoint(true)
           val touched = changed.select("_r").distinct()
             .collect().map(_.getLong(0)).toSeq.sorted
-          val prevRows = withR(vs.readPartRanges(v, "stats", touched).get)
+          val prevRows = withR(vs.readPartRanges(v, "stats", touched))
             .join(broadcast(changed.select("doc_id")), Seq("doc_id"), "left_anti")
           vs.commitWrites(batchId, Seq(
             DeltaWrite("grams", fold.batchGrams),
@@ -781,27 +661,20 @@ object Streaming {
 
   /** The (doc_id, n_grams, n_dup_grams) table a [[streamingDupNgrams]]
     * query has built so far (empty before the first fold). */
-  def currentDupNgrams(spark: SparkSession, stateDir: String): DataFrame = {
-    val vs = new VersionedState(spark, stateDir)
-    vs.readLatest() match {
-      case Some(v) => vs.readPart(v, "stats")
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType),
-            StructField("n_grams", LongType),
-            StructField("n_dup_grams", LongType))))
-    }
-  }
+  def currentDupNgrams(spark: SparkSession, stateDir: String): DataFrame =
+    new VersionedState(spark, stateDir).latestPart("stats",
+      StructType(Seq(
+        StructField("doc_id", LongType),
+        StructField("n_grams", LongType),
+        StructField("n_dup_grams", LongType))))
 
   /** Streaming IVF maintenance (the ann_ivf_incr fold as a foreachBatch
     * sink): vectors stream in; the FIRST micro-batch trains the
     * centroids (the bootstrap — a deployment would usually seed the
     * state with a batch-built index instead), every later batch assigns
     * against the frozen centroids and appends. State parts per version:
-    * "assigned" (cell, nbr_id, cv) + "centroids" (c, v) — sealed
-    * together by the shared marker.
+    * "assigned" (cell, nbr_id, cv) + "centroids" (c, v) — committed
+    * together by the version's manifest.
     *
     * CAVEAT: appends are batch-boundary-insensitive, TRAINING is not —
     * the centroids freeze on exactly the rows of micro-batch 0, so what

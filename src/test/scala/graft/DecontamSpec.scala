@@ -84,7 +84,8 @@ class DecontamSpec extends AnyFunSuite {
       (2L, "x0 a b c d e f g h"),
       (3L, "p1 p2 p3 p4 p5 p6 p7 p8"),
       (4L, "r r r r r r r r r r r r r r r r"),
-      (5L, "a b"))
+      (5L, "a b"),
+      (6L, null))
       .toDF("doc_id", "text")
     val rng = new scala.util.Random(77)
     val random = (0 until 300).map { i =>

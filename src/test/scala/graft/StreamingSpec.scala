@@ -292,7 +292,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == want, "delta-resolved stats diverge from batch dupNgramStats")
       // write-volume evidence: a non-compaction fold's grams dir holds
       // ONLY that batch's gram rows (batch-scale), not the whole relation
-      val latest = scala.io.Source.fromFile(new java.io.File(stateDir, "_LATEST")).mkString.trim.toLong
+      val latest = new Streaming.VersionedState(spark, stateDir).readLatest().get
       val vDir = f"v_$latest%012d"
       val gramsRows = spark.read.parquet(s"$stateDir/$vDir/grams").count()
       val batchGrams = graft.curate.Decontam
@@ -303,7 +303,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.streaming.stateRanges")
   }
 
-  test("versioned state recovers from a missing _LATEST pointer (crash between delete and rename)") {
+  test("versioned state ignores an in-flight v_ dir without a _PARTS manifest") {
     import spark.implicits._
     val stateDir = Files.createTempDirectory("cc_state_crash").toString
     // two committed folds: {1,2} then merge via 2-3
@@ -313,20 +313,18 @@ class StreamingSpec extends AnyFunSuite {
     def cur() = Streaming.currentClusters(spark, stateDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cur() == want)
-    // simulate the crash window: pointer deleted, rename never happened
-    val latest = new java.io.File(stateDir, "_LATEST")
-    assert(latest.delete(), "fixture: _LATEST must exist to delete")
-    // debris: an in-flight version dir WITHOUT the commit marker must be
-    // ignored by the fallback scan
-    assert(new java.io.File(stateDir, "v_000000000007").mkdir())
-    // fallback: newest marker-complete version, NOT empty state
-    assert(cur() == want, "missing pointer lost the standing state")
-    // the next fold resumes FROM the recovered version (batch 2 merges
+    // debris of a crashed fold: a newer version dir whose part landed but
+    // whose manifest (the commit) never did
+    val debris = new java.io.File(stateDir, "v_000000000007")
+    assert(new java.io.File(debris, "assign").mkdirs())
+    // the newest COMMITTED version is read, NOT the debris or empty state
+    assert(cur() == want, "an uncommitted version dir replaced the standing state")
+    // the next fold resumes FROM the committed version (batch 2 merges
     // 3-4; a from-scratch refold would know nothing about 1-2-3)
     Streaming.foldClusterBatch(Seq((3L, 4L)).toDF("a", "b"), stateDir, 2L)
     assert(cur() == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
-    assert(new java.io.File(stateDir, "_LATEST").exists(), "pointer not restored")
-    // a replay below the recovered version is still skipped
+    assert(!debris.exists(), "in-flight debris not pruned")
+    // a replay below the committed version is still skipped
     Streaming.foldClusterBatch(Seq((4L, 999L)).toDF("a", "b"), stateDir, 1L)
     assert(cur() == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
