@@ -122,8 +122,10 @@ object Decontam {
   private def dupNgramStatsPreHashed(df: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     val grams = docGrams(df, idCol, textCol, n)
+    // truncated once: the candidate count, the verification pass and the
+    // per-doc rollup all read it, and each would re-run tokenize+explode
     val hashed = grams.select(col("doc_id"), col("gram"),
-      xxhash64(col("gram")).as("gh"))
+      xxhash64(col("gram")).as("gh")).localCheckpoint(true)
     // hash-only frequency shuffle: 8-byte keys, no strings
     val cand = hashed.groupBy("gh").agg(count(lit(1)).as("ghf"))
       .where(col("ghf") > 1).select("gh")

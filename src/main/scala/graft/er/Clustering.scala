@@ -74,8 +74,10 @@ object Clustering {
     * to. Scale-adaptive, not
     * local-mode-tuned: on a real cluster the threshold bounds driver
     * memory, and corpus-scale edge sets (> threshold after the narrow
-    * localContract pass) still take the shuffle loop. Override with
-    * spark.graft.cc.driverMaxEdges (0 disables the fast path). */
+    * localContract pass) still take the shuffle loop. The same budget
+    * gates the driver regime of [[incrementalClustersWithDelta]], split
+    * evenly over the batch's partitions. Override with
+    * spark.graft.cc.driverMaxEdges (0 disables both fast paths). */
   val DefaultDriverCcMaxEdges: Long = 2000000L
 
   private def driverCcMaxEdges(spark: SparkSession): Long =
@@ -91,29 +93,48 @@ object Clustering {
     import spark.implicits._
     // one pair of primitive endpoint arrays per partition: no per-edge
     // objects on the driver
-    val chunks = e.select(col("a"), col("b")).as[(Long, Long)].mapPartitions { it =>
-      val a = Array.newBuilder[Long]
-      val b = Array.newBuilder[Long]
-      it.foreach { case (x, y) => a += x; b += y }
-      Iterator.single((a.result(), b.result()))
-    }.collect()
-    // dense node index = the sorted distinct endpoints; linking the larger
-    // root index under the smaller keeps every root its component minimum
-    val ids = Array.concat(chunks.flatMap { case (a, b) => Seq(a, b) }.toIndexedSeq: _*)
-    java.util.Arrays.sort(ids)
+    val uf = new MinUnionFind(e.select(col("a"), col("b")).as[(Long, Long)]
+      .mapPartitions(it => Iterator.single(chunkOf(it))).collect().toSeq)
+    localRows(spark, uf.ids.length)(i => (uf.ids(i), uf.ids(uf.root(i)))).toDF("id", "cluster")
+  }
+
+  /** A partition's edges as one pair of primitive endpoint arrays. */
+  private def chunkOf(it: Iterator[(Long, Long)]): (Array[Long], Array[Long]) = {
+    val a = Array.newBuilder[Long]
+    val b = Array.newBuilder[Long]
+    it.foreach { case (x, y) => a += x; b += y }
+    (a.result(), b.result())
+  }
+
+  /** The sorted distinct endpoints of edge chunks. */
+  private def sortedIds(chunks: Seq[(Array[Long], Array[Long])]): Array[Long] = {
+    val all = Array.concat(chunks.flatMap { case (a, b) => Seq(a, b) }: _*)
+    java.util.Arrays.sort(all)
     var n = 0
-    ids.indices.foreach { i =>
-      if (i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+    all.indices.foreach { i =>
+      if (i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 }
     }
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
+    java.util.Arrays.copyOf(all, n)
+  }
+
+  /** Union-find over the edges of `chunks` — the one union-find behind
+    * the partition-local contraction, the driver CC and the driver
+    * incremental fold. Node i is `ids(i)`, the sorted distinct
+    * endpoints; linking the larger root index under the smaller keeps
+    * every root its component minimum (union-by-min) and parent(i) <= i.
+    * Primitive arrays only: 8 B per endpoint occurrence while the index
+    * is sorted, then 8 B + 4 B (parent) per node. */
+  private final class MinUnionFind(chunks: Seq[(Array[Long], Array[Long])]) {
+    val ids: Array[Long] = sortedIds(chunks)
+    private val parent = Array.range(0, ids.length)
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    private def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
       while (c != r) { val next = parent(c); parent(c) = r; c = next }
       r
     }
-    def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, v)
     chunks.foreach { case (a, b) =>
       a.indices.foreach { k =>
         val ra = find(idx(a(k))); val rb = find(idx(b(k)))
@@ -121,14 +142,30 @@ object Clustering {
         else if (rb < ra) parent(ra) = rb
       }
     }
-    // parent(i) <= i always, so one ascending pass resolves every root
-    (0 until n).foreach(i => parent(i) = parent(parent(i)))
-    // an index view, not a tuple buffer: createDataset encodes row by row
-    val rows = new IndexedSeq[(Long, Long)] {
-      def length: Int = n
-      def apply(i: Int): (Long, Long) = (ids(i), ids(parent(i)))
+    /** Each node's root index (its component minimum). parent(i) <= i,
+      * so one ascending pass resolves every root. */
+    val root: Array[Int] = {
+      parent.indices.foreach(i => parent(i) = parent(parent(i)))
+      parent
     }
-    spark.createDataset(rows).toDF("id", "cluster")
+  }
+
+  /** The star edges (node → local-component minimum, node ≠ minimum) of
+    * one edge chunk. */
+  private def contract(chunk: (Array[Long], Array[Long])): (Array[Long], Array[Long]) = {
+    val uf = new MinUnionFind(Seq(chunk))
+    val members = Array.range(0, uf.ids.length).filter(i => uf.root(i) != i)
+    (members.map(uf.ids(_)), members.map(i => uf.ids(uf.root(i))))
+  }
+
+  /** `n` (Long, Long) rows as a local relation. An index view, not a
+    * tuple buffer: createDataset encodes row by row. */
+  private def localRows(spark: SparkSession, n: Int)(row: Int => (Long, Long)) = {
+    import spark.implicits._
+    spark.createDataset(new IndexedSeq[(Long, Long)] {
+      def length: Int = n
+      def apply(i: Int): (Long, Long) = row(i)
+    })
   }
 
   /** Loud non-convergence warning (round-4 advice): a loop that exhausts
@@ -168,25 +205,8 @@ object Clustering {
   private def localContract(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
     e.select(col("a"), col("b")).as[(Long, Long)].mapPartitions { it =>
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      it.foreach { case (a, b) =>
-        if (!parent.contains(a)) parent(a) = a
-        if (!parent.contains(b)) parent(b) = b
-        val ra = find(a); val rb = find(b)
-        // union-by-min: the root is always the component minimum
-        if (ra < rb) parent(rb) = ra
-        else if (rb < ra) parent(ra) = rb
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      parent.foreachKey { n => val r = find(n); if (n != r) out += ((n, r)) }
-      out.iterator
+      val (a, b) = contract(chunkOf(it))
+      a.indices.iterator.map(k => (a(k), b(k)))
     }.toDF("a", "b")
   }
 
@@ -467,25 +487,48 @@ object Clustering {
     * brand-new ids} yields the min member id of each merged component —
     * the same label batch CC assigns.
     *
-    * The plan never shuffles the node-scale assignment: batch endpoints
-    * are broadcast INTO a narrow scan of `oldClusters` (inner join,
-    * batch-side build) to pull the touched rows; contraction and
-    * relabeling then join the (small) touched/relabel tables back as
-    * broadcasts, so the only node-scale work is two narrow passes over
-    * the assignment table (probe + relabel) — no wide exchange at any
-    * width. Everything else is batch-scale. The broadcasts assume the
-    * batch ≪ corpus (the incremental premise); `broadcastMaxEndpoints`
-    * GUARDS that premise: when the batch's distinct endpoints exceed it
-    * (a catch-up or bootstrap-sized batch), the broadcast-probe plan
-    * would silently become a multi-GB broadcast (executor OOM), so the
-    * fold degrades to batch CC over the union graph instead —
-    * result-identical, because the standing assignment's (id, cluster)
-    * rows ARE a star edge set with the same connectivity (labels are
-    * component minima, so min-label CC over {assignment stars ∪ new
-    * edges} assigns exactly the min member id of every union component;
-    * ClusteringSpec drives both regimes to equal assignments). The
-    * default (5M endpoints ≈ 40 MB of packed longs) marks the crossover
-    * where two corpus-scale wide passes beat a giant broadcast. */
+    * Three regimes, all result-identical (ClusteringSpec drives each to
+    * the batch answer):
+    *   - DRIVER (the batch's contracted edges fit
+    *     spark.graft.cc.driverMaxEdges): one job contracts every batch
+    *     partition with union-find and ships its star edges as primitive
+    *     arrays — only when they fit the task's share, budget /
+    *     partitions, so the driver never receives more than the budget;
+    *     one narrow scan of `oldClusters` against a broadcast of the
+    *     sorted endpoints collects the touched (id, cluster) rows (at
+    *     most one per endpoint, two per edge); a driver union-find over
+    *     {star edges ∪ touched id → label edges} gives every touched
+    *     label its merged minimum and every brand-new id its label.
+    *     Driver memory, linear in the budget: 16 B per collected edge
+    *     and per touched row (at most two per edge); the probe's sorted
+    *     endpoint list (8 B per endpoint, plus its broadcast copy); the
+    *     union-find index over edges and touched rows (8 B per endpoint
+    *     occurrence while it sorts, then 13 B per node for index, parent
+    *     and kind); and the relabel map (at most one row per edge) plus
+    *     the brand-new rows (at most two per edge) as local relations at
+    *     ~80 B per row.
+    *   - BROADCAST (a task's share exceeded): the batch endpoints are
+    *     broadcast INTO a narrow scan of `oldClusters` (inner join,
+    *     batch-side build) to pull the touched rows; contraction and
+    *     relabeling then join the (small) touched/relabel tables back as
+    *     broadcasts, and the contracted graph runs through
+    *     [[connectedComponents]].
+    *   - BATCH CC (the batch's distinct endpoints exceed
+    *     `broadcastMaxEndpoints`, in either regime above): the
+    *     broadcast-probe plan would silently become a multi-GB broadcast
+    *     (executor OOM), so the fold degrades to batch CC over the union
+    *     graph instead — result-identical, because the standing
+    *     assignment's (id, cluster) rows ARE a star edge set with the same
+    *     connectivity (see [[incrementalViaBatchCc]]). The default (5M
+    *     endpoints ≈ 40 MB of packed longs) marks the crossover where two
+    *     corpus-scale wide passes beat a giant broadcast.
+    *
+    * In the driver and broadcast regimes the plan never shuffles the
+    * node-scale assignment: the outputs are narrow passes over it probing
+    * a broadcast relabel map — no wide exchange at any width.
+    * `checkpointDir` applies to the broadcast and batch-CC regimes, whose
+    * contracted CC may run the star loop; the driver regime has no
+    * rounds. */
   def incrementalClusters(
       spark: SparkSession,
       oldClusters: DataFrame,
@@ -495,6 +538,14 @@ object Clustering {
     incrementalClustersWithDelta(spark, oldClusters, newEdges,
       checkpointDir, broadcastMaxEndpoints).assignment
 
+  /** Which [[incrementalClusters]] regime folded a batch. */
+  sealed trait Regime
+  object Regime {
+    case object Driver extends Regime
+    case object Broadcast extends Regime
+    case object BatchCc extends Regime
+  }
+
   /** [[incrementalClusters]]' result together with its CHANGED-ROW set —
     * what a touched-range state writer persists per fold (round-7: the
     * streaming sink's per-fold write volume must track the batch, not
@@ -502,16 +553,21 @@ object Clustering {
     *   - `assignment`: the full refreshed (id, cluster) table (lazy —
     *     only pay for it if you materialize it);
     *   - `changed`: exactly the rows whose (id, cluster) differs from
-    *     `oldClusters` plus the brand-new ids — in the broadcast regime
-    *     an old row changes iff its cluster label is relabeled by the
-    *     contracted CC (merged != label), so `changed` is one narrow
+    *     `oldClusters` plus the brand-new ids — outside the batch-CC
+    *     regime an old row changes iff its cluster label is relabeled by
+    *     the contracted CC (merged != label), so `changed` is one narrow
     *     assignment probe of a broadcast relabel map plus the batch-new
     *     ids (batch-scale by the incremental premise);
-    *   - `changedIsFull`: true in the batch-CC fallback regime (a
-    *     corpus-sized batch), where deriving a delta would cost a full
-    *     compare — the caller should rewrite fully there anyway. */
+    *   - `regime`: how the batch was folded; in the batch-CC regime
+    *     (`changedIsFull`, a corpus-sized batch) deriving a delta would
+    *     cost a full compare, so `changed` is the full assignment — the
+    *     caller should rewrite fully there anyway;
+    *   - `emptyBatch`: the batch held no edge between two distinct ids,
+    *     so `assignment` is `oldClusters` and `changed` is empty. */
   final case class IncrementalCc(
-      assignment: DataFrame, changed: DataFrame, changedIsFull: Boolean)
+      assignment: DataFrame, changed: DataFrame, regime: Regime, emptyBatch: Boolean) {
+    def changedIsFull: Boolean = regime == Regime.BatchCc
+  }
 
   def incrementalClustersWithDelta(
       spark: SparkSession,
@@ -523,6 +579,81 @@ object Clustering {
     val e = newEdges
       .select(col("a").cast("long"), col("b").cast("long"))
       .where(col("a") =!= col("b"))
+    driverFold(spark, oc, e, broadcastMaxEndpoints)
+      .getOrElse(broadcastFold(spark, oc, e, checkpointDir, broadcastMaxEndpoints))
+  }
+
+  /** The driver regime of [[incrementalClusters]]: one bounded collect,
+    * one probe, a driver union-find. None when a task's contracted edges
+    * exceed its share of the budget, or the batch's distinct endpoints
+    * exceed `broadcastMaxEndpoints` (the other regimes take over). */
+  private def driverFold(
+      spark: SparkSession,
+      oc: DataFrame,
+      e: DataFrame,
+      broadcastMaxEndpoints: Long): Option[IncrementalCc] = {
+    import spark.implicits._
+    val edges = e.as[(Long, Long)].rdd
+    val share = driverCcMaxEdges(spark) / math.max(1, edges.getNumPartitions)
+    if (share <= 0) return None
+    // each task contracts its slice and ships its stars only if they fit
+    // its share, so the collect is bounded before the driver allocates
+    val shipped = edges.mapPartitions { it =>
+      val stars = contract(chunkOf(it))
+      Iterator.single(if (stars._1.length <= share) Some(stars) else None)
+    }.collect()
+    if (shipped.contains(None)) return None
+    val stars = shipped.toSeq.flatten
+    // localContract is node-preserving: these are the batch endpoints
+    val endpoints = sortedIds(stars)
+    if (endpoints.length > broadcastMaxEndpoints) return None
+    if (endpoints.isEmpty)
+      return Some(IncrementalCc(oc, spark.emptyDataset[(Long, Long)].toDF("id", "cluster"),
+        Regime.Driver, emptyBatch = true))
+    // touched standing rows: one narrow scan probing the sorted endpoints
+    val probe = spark.sparkContext.broadcast(endpoints)
+    val touched =
+      try oc.as[(Long, Long)].rdd.mapPartitions { it =>
+        val ids = probe.value
+        Iterator.single(chunkOf(it.filter(r => java.util.Arrays.binarySearch(ids, r._1) >= 0)))
+      }.collect().toSeq
+      finally probe.destroy()
+    // each touched id hangs on its standing label, so the labels join the
+    // node set and a merged component's root is the least of its labels
+    // and brand-new ids (a standing id is never below its own label)
+    val uf = new MinUnionFind(stars ++ touched)
+    val n = uf.ids.length
+    // 0 = brand-new id, 1 = standing id, 2 = standing label
+    val kind = new Array[Byte](n)
+    touched.foreach { case (ids, labels) =>
+      ids.indices.foreach { k =>
+        val i = uf.idx(ids(k))
+        if (kind(i) == 0) kind(i) = 1
+        kind(uf.idx(labels(k))) = 2
+      }
+    }
+    def rowsOf(sel: Array[Int]) =
+      localRows(spark, sel.length)(k => (uf.ids(sel(k)), uf.ids(uf.root(sel(k)))))
+    val relabel = broadcast(rowsOf(Array.range(0, n).filter(i => kind(i) == 2 && uf.root(i) != i))
+      .toDF("cluster", "merged"))
+    // one partition: the new-id rows land in the caller's writes as one
+    // extra slice, not one per local-relation split
+    val fresh = rowsOf(Array.range(0, n).filter(kind(_) == 0)).toDF("id", "cluster").coalesce(1)
+    val assignment = oc.join(relabel, Seq("cluster"), "left")
+      .select(col("id"), coalesce(col("merged"), col("cluster")).as("cluster"))
+    val changed = oc.join(relabel, Seq("cluster"))
+      .select(col("id"), col("merged").as("cluster"))
+    Some(IncrementalCc(assignment.unionAll(fresh), changed.unionAll(fresh),
+      Regime.Driver, emptyBatch = false))
+  }
+
+  /** The broadcast and batch-CC regimes of [[incrementalClusters]]. */
+  private def broadcastFold(
+      spark: SparkSession,
+      oc: DataFrame,
+      e: DataFrame,
+      checkpointDir: Option[String],
+      broadcastMaxEndpoints: Long): IncrementalCc = {
     // eagerly truncated (batch-scale by premise): the guard's count,
     // the broadcast probe, and incrementalViaBatchCc's universe all
     // consume this frame — without the checkpoint the explode+distinct
@@ -534,9 +665,10 @@ object Clustering {
     // the guard's count is one batch-scale aggregation — cheap next to
     // the fold itself, and the price of never OOMing an executor on a
     // mis-sized batch
-    if (endpoints.count() > broadcastMaxEndpoints) {
+    val nEndpoints = endpoints.count()
+    if (nEndpoints > broadcastMaxEndpoints) {
       val full = incrementalViaBatchCc(spark, oc, e, endpoints, checkpointDir)
-      return IncrementalCc(full, full, changedIsFull = true)
+      return IncrementalCc(full, full, Regime.BatchCc, emptyBatch = false)
     }
     // touched old rows: ONE narrow scan of the node-scale table probing
     // the broadcast batch ids; eagerly truncated (it is batch-scale) so
@@ -580,7 +712,7 @@ object Clustering {
         Seq("cluster"))
       .select(col("id"), col("merged").as("cluster"))
     IncrementalCc(oldPart.unionAll(newPart), relabeled.unionAll(newPart),
-      changedIsFull = false)
+      Regime.Broadcast, emptyBatch = nEndpoints == 0)
   }
 
   /** The guarded fallback of [[incrementalClusters]] for batches too big

@@ -202,13 +202,17 @@ object Streaming {
     *     for "no state" (StateCommitFaultSpec injects a fault at every
     *     commit-protocol call).
     *
-    * Scale shape: per micro-batch cost = batch-scale CC + one narrow read
-    * + one narrow write of the node-scale assignment (the broadcast-probe
-    * relabel — no wide exchange at assignment scale, see PlanAuditSpec).
-    * The full rewrite per batch is the compaction tradeoff: at 10^12
-    * nodes, amortize by lengthening the trigger interval, or partition the
-    * assignment by id range and rewrite only touched ranges (the standard
-    * refinement; not needed at this catalog's scale). */
+    * Scale shape: a batch whose contracted edges fit
+    * spark.graft.cc.driverMaxEdges folds on the driver — one bounded
+    * collect of its star edges, one narrow probe scan of the standing
+    * assignment, a union-find over touched labels and brand-new ids —
+    * then one narrow relabel pass yields the changed rows, and only the
+    * id-hash ranges holding them are rewritten (untouched ranges are
+    * inherited, see [[foldClusterBatch]]). Larger batches take the
+    * broadcast or batch-CC regime of
+    * [[graft.er.Clustering.incrementalClustersWithDelta]]; none but
+    * batch-CC (a corpus-sized batch, full rewrite) runs a wide exchange
+    * at assignment scale (PlanAuditSpec). */
   def streamingClusters(
       edges: DataFrame,
       stateDir: String,
@@ -236,12 +240,18 @@ object Streaming {
     *     version. `content` must carry the `_r` range column; `full`
     *     marks a whole-relation write (bootstrap / rescale /
     *     compaction). */
-  /** Manifest entry kinds for [[VersionedState]]'s `_PARTS` file. */
-  private sealed trait Entry { def refs: Set[Long] }
-  private final case class FullE(ver: Long) extends Entry { def refs = Set(ver) }
-  private final case class ChainE(base: Long, deltas: Seq[Long], compactEvery: Int)
-      extends Entry { def refs = deltas.toSet + base }
-  private final case class RangedE(r: Int, holders: Map[Long, Long])
+  /** Manifest entry kinds for [[VersionedState]]'s `_PARTS` file. Each
+    * carries the schema its files were written with, so a read never
+    * infers it from a Parquet footer (one Spark job per read). */
+  private sealed trait Entry { def refs: Set[Long]; def schema: StructType }
+  private final case class FullE(ver: Long, schema: StructType) extends Entry {
+    def refs = Set(ver)
+  }
+  private final case class ChainE(
+      base: Long, deltas: Seq[Long], compactEvery: Int, schema: StructType) extends Entry {
+    def refs = deltas.toSet + base
+  }
+  private final case class RangedE(r: Int, holders: Map[Long, Long], schema: StructType)
       extends Entry { def refs = holders.values.toSet }
 
   private[graft] sealed trait PartWrite { def name: String }
@@ -281,29 +291,35 @@ object Streaming {
       }
 
     /** Resolve a part at version `v` through its manifest entry. */
-    def readPart(v: Long, name: String): DataFrame = entry(v, name) match {
-      case FullE(ver) => spark.read.parquet(partPath(ver, name))
-      case ChainE(base, deltas, _) => spark.read.parquet((base +: deltas).map(partPath(_, name)): _*)
-      case RangedE(_, holders) =>
-        spark.read.parquet(
-          holders.toSeq.sortBy(_._1).map { case (k, hv) => rangePath(hv, name, k) }: _*)
+    def readPart(v: Long, name: String): DataFrame = {
+      val en = entry(v, name)
+      read(en.schema, en match {
+        case FullE(ver, _) => Seq(partPath(ver, name))
+        case ChainE(base, deltas, _, _) => (base +: deltas).map(partPath(_, name))
+        case RangedE(_, holders, _) =>
+          holders.toSeq.sortBy(_._1).map { case (k, hv) => rangePath(hv, name, k) }
+      })
     }
+
+    /** Parquet files of a known schema (an empty frame for no paths). */
+    private def read(schema: StructType, paths: Seq[String]): DataFrame =
+      if (paths.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      else spark.read.schema(schema).parquet(paths: _*)
 
     /** The part `name` at the newest version, or an empty frame of
       * `schema` before the first commit. */
     def latestPart(name: String, schema: StructType): DataFrame = readLatest() match {
       case Some(v) => readPart(v, name)
-      case None =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      case None => read(schema, Nil)
     }
 
     /** Pruned read of specific ranges of a RANGED part (only the touched
       * leaf dirs are listed — the partition-pruned read the fold's
       * passthrough needs). Callers check [[isRangedWith]] first. */
     def readPartRanges(v: Long, name: String, ranges: Seq[Long]): DataFrame = entry(v, name) match {
-      case RangedE(_, holders) =>
-        val paths = ranges.flatMap(k => holders.get(k).map(rangePath(_, name, k)))
-        if (paths.isEmpty) readPart(v, name).limit(0) else spark.read.parquet(paths: _*)
+      case RangedE(_, holders, schema) =>
+        read(schema, ranges.flatMap(k => holders.get(k).map(rangePath(_, name, k))))
       case e => throw new IllegalStateException(s"part $name of $stateDir v=$v is not ranged: $e")
     }
 
@@ -312,7 +328,7 @@ object Streaming {
       * changed range count takes the one-time full rescale write). */
     def isRangedWith(v: Long, name: String, nRanges: Int): Boolean =
       entry(v, name) match {
-        case RangedE(r, _) => r == nRanges
+        case RangedE(r, _, _) => r == nRanges
         case _ => false
       }
 
@@ -325,28 +341,35 @@ object Streaming {
     private def readManifest(v: Long): Map[String, Entry] = {
       val txt = Commit.read(fs, manifestPath(v)).getOrElse(
         throw new java.io.FileNotFoundException(s"${manifestPath(v)} vanished"))
+      // one line per part: its entry tokens, a tab, its schema as JSON
       txt.split('\n').filter(_.nonEmpty).map { line =>
-        val t = line.split(' ')
+        val (t, schema) = line.split("\t", 2) match {
+          case Array(tokens, json) =>
+            (tokens.split(' '), DataType.fromJson(json).asInstanceOf[StructType])
+          case _ => throw new IllegalStateException(s"${manifestPath(v)}: no schema in '$line'")
+        }
         t(0) match {
-          case "full" => t(1) -> (FullE(t(2).toLong): Entry)
+          case "full" => t(1) -> (FullE(t(2).toLong, schema): Entry)
           case "chain" =>
-            t(1) -> (ChainE(t(2).toLong, t.drop(4).map(_.toLong).toSeq, t(3).toInt): Entry)
+            t(1) -> (ChainE(t(2).toLong, t.drop(4).map(_.toLong).toSeq, t(3).toInt, schema): Entry)
           case "ranged" =>
             t(1) -> (RangedE(t(2).toInt, t.drop(3).map { kv =>
               val p = kv.split(':'); p(0).toLong -> p(1).toLong
-            }.toMap): Entry)
+            }.toMap, schema): Entry)
         }
       }.toMap
     }
 
     private def manifestText(m: Map[String, Entry]): String =
-      m.toSeq.sortBy(_._1).map {
-        case (n, FullE(ver)) => s"full $n $ver"
-        case (n, ChainE(base, deltas, ce)) =>
-          (Seq("chain", n, base.toString, ce.toString) ++ deltas.map(_.toString)).mkString(" ")
-        case (n, RangedE(r, holders)) =>
-          (Seq("ranged", n, r.toString) ++
-            holders.toSeq.sorted.map { case (k, hv) => s"$k:$hv" }).mkString(" ")
+      m.toSeq.sortBy(_._1).map { case (n, en) =>
+        val tokens = en match {
+          case FullE(ver, _) => Seq("full", n, ver.toString)
+          case ChainE(base, deltas, ce, _) =>
+            Seq("chain", n, base.toString, ce.toString) ++ deltas.map(_.toString)
+          case RangedE(r, holders, _) =>
+            Seq("ranged", n, r.toString) ++ holders.toSeq.sorted.map { case (k, hv) => s"$k:$hv" }
+        }
+        tokens.mkString(" ") + "\t" + en.schema.json
       }.mkString("\n")
 
     /** Write each part per its [[PartWrite]] kind, commit the version by
@@ -359,39 +382,42 @@ object Streaming {
       writes.foreach {
         case FullWrite(name, df) =>
           df.write.mode("overwrite").parquet(partPath(batchId, name))
-          manifest += name -> FullE(batchId)
+          manifest += name -> FullE(batchId, df.schema)
         case DeltaWrite(name, delta, compactEvery) =>
+          val schema = delta.schema
           prevManifest.get(name) match {
-            case Some(ChainE(base, deltas, _)) if deltas.size + 1 < compactEvery =>
+            case Some(ChainE(base, deltas, _, _)) if deltas.size + 1 < compactEvery =>
               delta.write.mode("overwrite").parquet(partPath(batchId, name))
-              manifest += name -> ChainE(base, deltas :+ batchId, compactEvery)
-            case Some(e @ ChainE(_, _, _)) =>
+              manifest += name -> ChainE(base, deltas :+ batchId, compactEvery, schema)
+            case Some(e: ChainE) =>
               // chain at budget: compact — one full rewrite every
               // compactEvery folds (amortized O(state/compactEvery))
-              val resolved = spark.read.parquet((e.base +: e.deltas).map(partPath(_, name)): _*)
+              val resolved = read(e.schema, (e.base +: e.deltas).map(partPath(_, name)))
               resolved.unionByName(delta).write.mode("overwrite").parquet(partPath(batchId, name))
-              manifest += name -> FullE(batchId)
-            case Some(FullE(base)) =>
+              manifest += name -> FullE(batchId, schema)
+            case Some(FullE(base, _)) =>
               delta.write.mode("overwrite").parquet(partPath(batchId, name))
-              manifest += name -> ChainE(base, Seq(batchId), compactEvery)
+              manifest += name -> ChainE(base, Seq(batchId), compactEvery, schema)
             case _ =>
               // first commit of this part: the delta IS the relation
               delta.write.mode("overwrite").parquet(partPath(batchId, name))
-              manifest += name -> FullE(batchId)
+              manifest += name -> FullE(batchId, schema)
           }
         case RangedWrite(name, content, nRanges, touchedRanges, full, keyCol, maxRefs) =>
+          // the range column lives in the directory names, not the files
+          val schema = StructType(content.schema.filterNot(_.name == "_r"))
           def listLanded(): Set[Long] =
             fs.listStatus(new Path(partPath(batchId, name)))
               .map(_.getPath.getName).filter(_.startsWith("_r="))
               .map(_.stripPrefix("_r=").toLong).toSet
           val prevHolders = prevManifest.get(name) match {
-            case Some(RangedE(r, holders)) if r == nRanges && !full => holders
+            case Some(RangedE(r, holders, _)) if r == nRanges && !full => holders
             case _ => Map.empty[Long, Long] // bootstrap / rescale / forced full
           }
           val wouldHold = prevHolders ++ touchedRanges.map(_ -> batchId)
           if (full || prevHolders.isEmpty) {
             content.write.partitionBy("_r").mode("overwrite").parquet(partPath(batchId, name))
-            manifest += name -> RangedE(nRanges, listLanded().map(_ -> batchId).toMap)
+            manifest += name -> RangedE(nRanges, listLanded().map(_ -> batchId).toMap, schema)
           } else if (wouldHold.values.toSet.size > maxRefs) {
             // too many live holder versions: compact — resolve the
             // UNTOUCHED ranges from their previous holders (the touched
@@ -402,18 +428,18 @@ object Streaming {
             val fullDf =
               if (untouched.isEmpty) content
               else {
-                val prevRows = spark.read.parquet(untouched.map { case (k, hv) =>
+                val prevRows = read(schema, untouched.map { case (k, hv) =>
                   rangePath(hv, name, k)
-                }: _*).withColumn("_r", pmod(xxhash64(col(keyCol)), lit(nRanges.toLong)))
+                }).withColumn("_r", pmod(xxhash64(col(keyCol)), lit(nRanges.toLong)))
                 content.unionByName(prevRows)
               }
             fullDf.write.partitionBy("_r").mode("overwrite").parquet(partPath(batchId, name))
-            manifest += name -> RangedE(nRanges, listLanded().map(_ -> batchId).toMap)
+            manifest += name -> RangedE(nRanges, listLanded().map(_ -> batchId).toMap, schema)
           } else {
             content.write.partitionBy("_r").mode("overwrite").parquet(partPath(batchId, name))
             val landed = listLanded()
             manifest += name -> RangedE(nRanges,
-              prevHolders ++ touchedRanges.toSet.intersect(landed).map(_ -> batchId))
+              prevHolders ++ touchedRanges.toSet.intersect(landed).map(_ -> batchId), schema)
           }
       }
       Commit.write(fs, manifestPath(batchId), manifestText(manifest))
@@ -461,7 +487,6 @@ object Streaming {
     // overwriting the SAME version dir would race, so skip instead
     if (prev.exists(_ >= batchId)) return
     val e = batch.select(col("a").cast("long"), col("b").cast("long"))
-    if (e.isEmpty) return
     val nR = assignRanges(spark)
     def commitFull(assign: DataFrame): Unit =
       vs.commitWrites(batchId,
@@ -471,11 +496,15 @@ object Streaming {
       case None =>
         // first batch: plain batch CC; the id universe is the batch's own
         // endpoints (the standing universe grows with each batch's edges)
+        if (e.isEmpty) return
         commitFull(graft.er.Clustering.assign(
           spark, e.select(explode(array(col("a"), col("b"))).as("id")).distinct(), e))
       case Some(v) =>
         val standing = vs.readPart(v, "assign")
         val r = graft.er.Clustering.incrementalClustersWithDelta(spark, standing, e)
+        // no edge between distinct ids: nothing to commit (the fold
+        // learned that from its own collect or count — no extra job)
+        if (r.emptyBatch) return
         if (r.changedIsFull || !vs.isRangedWith(v, "assign", nR)) commitFull(r.assignment)
         else {
           // touched ranges = ranges of the changed rows (batch-scale);

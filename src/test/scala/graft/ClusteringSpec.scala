@@ -213,15 +213,31 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   private def runIncremental(
-      ids: Seq[Long], oldEdges: Seq[(Long, Long)], newEdges: Seq[(Long, Long)]): Map[Long, Long] = {
+      ids: Seq[Long], oldEdges: Seq[(Long, Long)], newEdges: Seq[(Long, Long)]): Map[Long, Long] =
+    runIncrementalIn(ids, oldEdges, newEdges)._1
+
+  /** The incremental fold with its result flags, under an optional
+    * spark.graft.cc.driverMaxEdges budget; `batchParts` slices the batch
+    * into that many contiguous partitions (None keeps the local
+    * relation's split). */
+  private def runIncrementalIn(
+      ids: Seq[Long], oldEdges: Seq[(Long, Long)], newEdges: Seq[(Long, Long)],
+      driverMaxEdges: Option[Long] = None,
+      batchParts: Option[Int] = None): (Map[Long, Long], Clustering.IncrementalCc) = {
     import spark.implicits._
     val standing = Clustering.assign(
       spark, ids.toDF("id"),
       if (oldEdges.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b") else oldEdges.toDF("a", "b"))
-    val batch =
-      if (newEdges.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b") else newEdges.toDF("a", "b")
-    Clustering.incrementalClusters(spark, standing, batch)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val batch = batchParts match {
+      case Some(p) => spark.sparkContext.parallelize(newEdges, p).toDF("a", "b")
+      case None =>
+        if (newEdges.isEmpty) Seq.empty[(Long, Long)].toDF("a", "b") else newEdges.toDF("a", "b")
+    }
+    driverMaxEdges.foreach(m => spark.conf.set("spark.graft.cc.driverMaxEdges", m.toString))
+    try {
+      val r = Clustering.incrementalClustersWithDelta(spark, standing, batch)
+      (r.assignment.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, r)
+    } finally if (driverMaxEdges.nonEmpty) spark.conf.unset("spark.graft.cc.driverMaxEdges")
   }
 
   test("incremental CC: merging two standing clusters and linking brand-new ids is exact") {
@@ -290,8 +306,37 @@ class ClusteringSpec extends AnyFunSuite {
         // endpoints may be brand-new, exactly the crawl-increment shape
         val ids = (oldE.flatMap(e => Seq(e._1, e._2)) ++ Seq(0L)).distinct
         val want = batchAssign((ids ++ newE.flatMap(e => Seq(e._1, e._2))).distinct, oldE ++ newE)
-        assert(runIncremental(ids, oldE, newE) == want, s"round $round: old=$oldE new=$newE")
+        // each split twice: the driver regime (the default budget holds
+        // any of these batches) and the distributed broadcast regime
+        val (driver, d) = runIncrementalIn(ids, oldE, newE)
+        assert(driver == want, s"round $round (driver regime): old=$oldE new=$newE")
+        assert(d.regime == Clustering.Regime.Driver && d.emptyBatch == newE.isEmpty)
+        val (distributed, b) = runIncrementalIn(ids, oldE, newE, driverMaxEdges = Some(0L))
+        assert(distributed == want, s"round $round (broadcast regime): old=$oldE new=$newE")
+        assert(b.regime == Clustering.Regime.Broadcast && b.emptyBatch == newE.isEmpty)
       }
     }
+  }
+
+  test("incremental CC: a task over its share of the driver budget takes the broadcast regime") {
+    // standing {1,2,3}, {10,11}; the batch chain 3-20-21-10 lands in one
+    // partition and contracts to 3 star edges (20→3, 21→3, 10→3)
+    val ids = Seq(1L, 2L, 3L, 10L, 11L)
+    val oldE = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+    val newE = Seq((3L, 20L), (20L, 21L), (21L, 10L))
+    val want = batchAssign(ids ++ Seq(20L, 21L), oldE ++ newE)
+    val (fits, f) = runIncrementalIn(ids, oldE, newE, Some(3L), batchParts = Some(1))
+    assert(fits == want && f.regime == Clustering.Regime.Driver)
+    val (over, o) = runIncrementalIn(ids, oldE, newE, Some(2L), batchParts = Some(1))
+    assert(over == want && o.regime == Clustering.Regime.Broadcast)
+    // the share is per task: the chain plus a thrice-repeated pair
+    // contracts to 4 stars, inside a budget of 4 as one partition; as two
+    // partitions of 3 rows each, the chain's 3 stars exceed the share of 2
+    val sliced = newE ++ Seq.fill(3)((40L, 41L))
+    val want2 = batchAssign(ids ++ Seq(20L, 21L, 40L, 41L), oldE ++ sliced)
+    val (one, o1) = runIncrementalIn(ids, oldE, sliced, Some(4L), batchParts = Some(1))
+    assert(one == want2 && o1.regime == Clustering.Regime.Driver)
+    val (two, o2) = runIncrementalIn(ids, oldE, sliced, Some(4L), batchParts = Some(2))
+    assert(two == want2 && o2.regime == Clustering.Regime.Broadcast)
   }
 }

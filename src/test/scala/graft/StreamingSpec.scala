@@ -268,6 +268,11 @@ class StreamingSpec extends AnyFunSuite {
       val fold = rangeDirs("v_000000000001")
       assert(boot.size > 2, s"bootstrap should land many ranges: $boot")
       assert(fold.size <= 2, s"fold rewrote untouched ranges: $fold")
+      // an empty batch commits no version
+      Streaming.foldClusterBatch(Seq.empty[(Long, Long)].toDF("a", "b"), stateDir, 2L)
+      assert(new Streaming.VersionedState(spark, stateDir).readLatest().contains(1L))
+      assert(!new java.io.File(stateDir, "v_000000000002").exists(),
+        "an empty batch landed a version dir")
     } finally spark.conf.unset("spark.graft.streaming.stateRanges")
   }
 
