@@ -88,7 +88,7 @@ object Dedup {
       banded.groupBy("bucket").agg(count(lit(1)).as("bsz")), maxBucket)
 
   /** [[capBuckets]] against a CALLER-SUPPLIED census (bucket, bsz) — the
-    * index-at-rest shape: [[survivorsIncremental]] maintains the standing
+    * index-at-rest shape: [[survivorsIncrementalDelta]] maintains the standing
     * bucket sizes incrementally and derives the union census from the
     * batch's band deltas alone, so the cap never re-counts the corpus.
     * Rows whose bucket is absent from `sizes` pass through uncapped
@@ -219,7 +219,7 @@ object Dedup {
   }
 
   /** The banded self-join half of [[minhashPairs]], over a caller-persisted
-    * signature table (the index-at-rest shape [[survivorsIncremental]]'s
+    * signature table (the index-at-rest shape [[survivorsIncrementalDelta]]'s
     * standing state uses). */
   private[graft] def minhashPairsFromSigs(
       sigs: DataFrame,
@@ -250,7 +250,7 @@ object Dedup {
   }
 
   /** (id, sig) MinHash signature table — the LSH index relation a
-    * deployment persists (and [[survivorsIncremental]] treats as standing
+    * deployment persists (and [[survivorsIncrementalDelta]] treats as standing
     * state). */
   private[graft] def minhashSigs(
       df: DataFrame, idCol: String, textCol: String,
@@ -375,9 +375,7 @@ object Dedup {
     *                        container stays eligible to keep
     *   tier = "near"      : dropped, connected through near-dup (or
     *                        container-side containment) edges only.
-    * Tier precedence keep > exact > contained > near: byte-identity is
-    * the strongest (and cheapest to re-verify) evidence, so it wins the
-    * label even when a doc is also a containment victim.
+    * Tier precedence keep > exact > contained > near (see [[assignTiers]]).
     *
     * Deterministic and partitioning-invariant: survivor = min id of the
     * component; all edge tiers and the CC are order-independent.
@@ -387,11 +385,11 @@ object Dedup {
     * edges only (|edges| << |corpus| after blocking) — no stage touches
     * the full pair space.
     *
-    * Precondition (also for [[survivorsIncremental]]): `textCol` must be
-    * non-null — md5(NULL) is NULL and the content-hash equi-joins drop
-    * such rows from the decision table entirely (no keep AND no drop),
-    * exactly as the SQL oracle's join does. Filter or impute null text
-    * upstream. */
+    * Precondition (also for [[survivorsIncrementalDelta]]): `textCol`
+    * must be non-null — md5(NULL) is NULL and the content-hash equi-joins
+    * drop such rows from the decision table entirely (no keep AND no
+    * drop), exactly as the SQL oracle's join does. Filter or impute null
+    * text upstream. */
   def survivors(
       df: DataFrame,
       idCol: String,
@@ -415,16 +413,8 @@ object Dedup {
           s"minJaccard=$minJaccard, maxBucket=$maxBucket) — a mismatched table would change " +
           "survivor clusters silently")
     }
-    val spark = df.sparkSession
-    val hashed = df.select(
-      col(idCol).cast("long").as("id"),
-      md5(col(textCol).cast("binary")).as("content_hash"))
-    val grp = hashed.groupBy("content_hash")
-      .agg(min("id").as("gmin"), count(lit(1)).as("gsz"))
-    val withG = hashed.join(grp, Seq("content_hash"))
-      .select(col("id"), col("gmin"), (col("gsz") > 1).as("has_exact"))
-    val exactEdges = withG.where(col("id") =!= col("gmin"))
-      .select(col("id").as("a"), col("gmin").as("b"))
+    val hashed = contentHashes(df, idCol, textCol)
+    val withG = withGroups(hashed, hashGroups(hashed))
     // `nearPairs`: a caller that has ALREADY materialized the minhash pair
     // table for the same (input, shingleK, nHashes, rowsPerBand,
     // minJaccard, maxBucket) can pass it in to skip the second signature
@@ -451,22 +441,55 @@ object Dedup {
         .join(hashed.select(col("id").as("doc_a")), Seq("doc_a"), "left_semi")
         .join(hashed.select(col("id").as("doc_b")), Seq("doc_b"), "left_semi")
         .localCheckpoint(true))
-    val contEdges = cont.map(
-      _.select(col("doc_a").as("a"), col("doc_b").as("b")))
-    val edges = contEdges.foldLeft(exactEdges.unionByName(nearEdges))(_ unionByName _)
-    val cc = graft.er.Clustering.connectedComponents(spark, edges)
-    // containment victims (pair-table scale, distinct doc ids ≤ corpus):
-    // flagged via a left join, NOT a broadcast hint — victim volume is
-    // corpus-derived (the no-forced-broadcast audit rule); AQE broadcasts
-    // it from runtime stats while it fits
-    val victims = cont.map(
-      _.select(col("doc_a").as("id")).distinct().withColumn("is_contained", lit(true)))
-    val base = victims.foldLeft(withG.join(cc, Seq("id"), "left"))(
-      (d, v) => d.join(v, Seq("id"), "left"))
-    val contained =
-      if (containmentPairs.isDefined) coalesce(col("is_contained"), lit(false))
-      else lit(false)
-    base
+    val edges = cont.foldLeft(exactEdges(withG).unionByName(nearEdges))(
+      _ unionByName containmentEdges(_))
+    val cc = graft.er.Clustering.connectedComponents(df.sparkSession, edges)
+    assignTiers(withG.join(cc, Seq("id"), "left"), cont.map(victimsOf))
+  }
+
+  /** (id, content_hash) per row — the exact tier's key. */
+  private def contentHashes(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"),
+      md5(col(textCol).cast("binary")).as("content_hash"))
+
+  /** The exact-dedup index (content_hash, gmin, gsz) of [[contentHashes]]
+    * rows. */
+  private def hashGroups(hashed: DataFrame): DataFrame =
+    hashed.groupBy("content_hash").agg(min("id").as("gmin"), count(lit(1)).as("gsz"))
+
+  /** (id, gmin, has_exact): each hashed row against its content-hash group
+    * (content_hash, gmin, gsz) — a standing, batch or merged index. */
+  private def withGroups(hashed: DataFrame, groups: DataFrame): DataFrame =
+    hashed.join(groups, Seq("content_hash"))
+      .select(col("id"), col("gmin"), (col("gsz") > 1).as("has_exact"))
+
+  /** Exact edges over [[withGroups]] rows: every doc to its group min. */
+  private def exactEdges(withG: DataFrame): DataFrame =
+    withG.where(col("id") =!= col("gmin"))
+      .select(col("id").as("a"), col("gmin").as("b"))
+
+  /** Containment pairs (doc_a contained in doc_b) as CC edges. */
+  private def containmentEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+
+  /** The distinct containment victims (id) of a pair table. */
+  private def victimsOf(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("id")).distinct()
+
+  /** THE tier rule, shared by batch [[survivors]], the bootstrap's
+    * standing decisions and both branches of the fold: (id, has_exact,
+    * cluster) rows, plus the distinct containment victims (id) when the
+    * containment tier is maintained, become (id, survivor_id, tier) with
+    * precedence keep > exact > contained > near. Byte-identity is the
+    * strongest (and cheapest to re-verify) evidence, so it wins the label
+    * even when a doc is also a containment victim. Victims are flagged
+    * through a left join, NOT a broadcast hint — victim volume is
+    * corpus-derived (the no-forced-broadcast audit rule); AQE broadcasts
+    * it from runtime stats while it fits. */
+  private def assignTiers(base: DataFrame, victims: Option[DataFrame]): DataFrame = {
+    val contained = victims.fold(lit(false))(_ => coalesce(col("is_contained"), lit(false)))
+    victims.foldLeft(base)((d, v) =>
+      d.join(v.withColumn("is_contained", lit(true)), Seq("id"), "left"))
       .withColumn("survivor_id", coalesce(col("cluster"), col("id")))
       .withColumn(
         "tier",
@@ -478,9 +501,9 @@ object Dedup {
   }
 
   /** The standing dedup state a deployment maintains between crawl
-    * increments — the relations [[survivorsIncremental]] folds a document
-    * batch into. All frames should be persisted by the caller (they are
-    * each read multiple times per fold):
+    * increments — the relations [[survivorsIncrementalDelta]] folds a
+    * document batch into. All frames should be persisted by the caller
+    * (they are each read multiple times per fold):
     *   - `hashed` (id, content_hash): node-scale narrow table;
     *   - `sigs` (id, sig): the MinHash signature table;
     *   - `banded` (bucket, id, sig): the BANDED LSH index at rest — the
@@ -497,12 +520,20 @@ object Dedup {
     *     fold derives each touched bucket's UNION size as bsz + the
     *     batch's band delta — never a corpus-scale re-count.
     *   - `groups` (content_hash, gmin, gsz): the exact-dedup index;
-    *   - `clusters` (id, cluster): converged CC over the standing
-    *     exact+near edge graph (covers ids that appear in edges;
-    *     isolated docs are singletons by omission, as in
-    *     [[graft.er.Clustering.assign]]'s left-join convention).
-    * Parameters are carried so a fold with drifted settings fails loudly
-    * (the NearPairTable rule). */
+    *   - `clusters` (id, cluster): converged CC over the standing edge
+    *     graph — exact ∪ near, plus containment when `containment` is
+    *     defined, the same edge classes every fold adds (covers ids that
+    *     appear in edges; isolated docs are singletons by omission, as in
+    *     [[graft.er.Clustering.assign]]'s left-join convention);
+    *   - `decisions` (id, survivor_id, tier): the STANDING decision table
+    *     — what the previous fold (or the bootstrap) already answered, so
+    *     a fold emits only the CHANGED rows and passes every other row
+    *     through untouched (fold output volume tracks the batch);
+    *   - `containment`: the optional containment tier at rest; a fold
+    *     probes containment pairs and victims only when it is defined.
+    * The LSH parameters are carried so every fold (and
+    * [[withContainment]]) runs with exactly the settings the frames were
+    * built with. */
   final case class SurvivorIndex(
       hashed: DataFrame,
       sigs: DataFrame,
@@ -510,29 +541,82 @@ object Dedup {
       bucketSizes: DataFrame,
       groups: DataFrame,
       clusters: DataFrame,
+      decisions: DataFrame,
       shingleK: Int,
       nHashes: Int,
       rowsPerBand: Int,
       minJaccard: Double,
       maxBucket: Int,
-      /** The STANDING decision table (id, survivor_id, tier) — what the
-        * previous fold (or the bootstrap) already answered. Carried so a
-        * fold can emit only the CHANGED rows and pass every other row
-        * through untouched (round-6 verdict item 3: fold output volume
-        * must track the batch, not re-derive the corpus-scale table). */
-      decisions: DataFrame = null) {
+      containment: Option[ContainmentIndex]) {
     /** Every frame a caller should persist/unpersist as a unit. */
     def frames: Seq[DataFrame] =
-      Seq(hashed, sigs, banded, bucketSizes, groups, clusters) ++
-        Option(decisions).toSeq
+      Seq(hashed, sigs, banded, bucketSizes, groups, clusters, decisions) ++
+        containment.toSeq.flatMap(_.frames)
   }
+
+  /** The CONTAINMENT tier at rest (the incremental twin of
+    * `survivors(..., containmentPairs = ...)`):
+    *   - `tokFreq` (tok, tf): the FROZEN rare-first token order (standing
+    *     corpus frequencies). Frozen deliberately: the prefix filter is
+    *     lossless under ANY total order applied consistently, so folds
+    *     sort batch tokens under the bootstrap order (unseen → tf 0,
+    *     ties by token string) instead of re-counting the corpus;
+    *   - `toks` (doc_id, lang, source, n, stoks): standing docs' distinct
+    *     tokens sorted by that order (the verification relation);
+    *   - `contPrefix` (lang, source, doc_a, na, tok): standing prefix
+    *     explode — probed when a BATCH doc may contain a standing one;
+    *   - `contFull` (lang, source, doc_b, nb, tok): the standing inverted
+    *     index — probed when a batch doc is contained in a standing one.
+    *     At deployment both are stored partitioned by token, so a fold's
+    *     touched-token semi-join is a pruned read (the `banded` rule);
+    *   - `victims` (id): standing containment victims. Monotone — docs
+    *     never leave the corpus, so a standing victim stays one;
+    *   - `hotPostings` (lang, source, tok, cnt): posting keys whose
+    *     at-rest inverted-index list was trimmed to `maxPosting` entries
+    *     (EMPTY in the exact regime; see [[DefaultMaxPosting]]);
+    *   - `hotPostingCount`: their number, counted once at bootstrap — 0
+    *     means the cap never bound and every fold is exact, so folds skip
+    *     the dropped-candidate accounting job entirely. */
+  final case class ContainmentIndex(
+      tokFreq: DataFrame,
+      toks: DataFrame,
+      contPrefix: DataFrame,
+      contFull: DataFrame,
+      victims: DataFrame,
+      hotPostings: DataFrame,
+      maxPosting: Int,
+      hotPostingCount: Long) {
+    def frames: Seq[DataFrame] =
+      Seq(tokFreq, toks, contPrefix, contFull, victims, hotPostings)
+  }
+
+  /** Compatibility name for the benchmark harness under `perfbench/`,
+    * which is compiled against it; the engine uses [[SurvivorIndex]]. */
+  type FullSurvivorIndex = SurvivorIndex
+
+  /** Cap on the containment inverted index's posting list per
+    * (lang, source, token) AT REST — the round-6 verdict's fix for the
+    * one unbounded read in the containment fold: a hot token (new
+    * boilerplate entering the corpus) otherwise yields a posting read
+    * that grows with the corpus, since containment has no size-ratio
+    * bound to trim the container side with. Entries kept are the
+    * maxPosting hash-smallest container docs (splitmix64 order — the
+    * SourceCap discipline, deterministic and unbiased); the trimmed
+    * keys' census stays at rest and every bootstrap/fold in the capped
+    * regime LOGS its dropped-candidate count (no silent truncation).
+    * Above-cap trimming makes containment recall on those keys a
+    * DECLARED approximation (the DefaultMaxBucket precedent); the cap is
+    * far above the catalog's posting sizes, so the oracle gate runs in
+    * the exact regime. */
+  val DefaultMaxPosting: Int = 4096
 
   /** Build the standing index from a document table (the one-time batch
     * bootstrap; every later increment goes through
-    * [[survivorsIncremental]]). `cache` is applied to each index frame
-    * BEFORE downstream use — pass `_.persist(...)` so the bootstrap's CC
-    * (which references sigs several times) and every later fold read the
-    * materialized frames instead of re-shingling the standing corpus. */
+    * [[survivorsIncrementalDelta]]). `cache` is applied to each index
+    * frame BEFORE downstream use — pass `_.persist(...)` so the
+    * bootstrap's CC (which references sigs several times) and every later
+    * fold read the materialized frames instead of re-shingling the
+    * standing corpus. */
   def buildSurvivorIndex(
       df: DataFrame,
       idCol: String,
@@ -542,100 +626,151 @@ object Dedup {
       rowsPerBand: Int = 8,
       minJaccard: Double = 0.5,
       maxBucket: Int = DefaultMaxBucket,
+      cache: DataFrame => DataFrame = identity): SurvivorIndex =
+    bootstrap(df, idCol, textCol, shingleK, nHashes, rowsPerBand, minJaccard,
+      maxBucket, cache, containment = None)
+
+  /** [[buildSurvivorIndex]] with the containment tier at rest. `df` must
+    * carry (idCol, textCol, lang, source) — containment blocks within
+    * (lang, source), the catalog convention (Queries.containmentPairs). */
+  def buildFullSurvivorIndex(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleK: Int = 5,
+      nHashes: Int = 64,
+      rowsPerBand: Int = 8,
+      minJaccard: Double = 0.5,
+      maxBucket: Int = DefaultMaxBucket,
       cache: DataFrame => DataFrame = identity,
-      extraEdges: Option[DataFrame] = None): SurvivorIndex = {
-    val spark = df.sparkSession
-    val nBands = nHashes / rowsPerBand
-    val hashed = cache(df.select(
-      col(idCol).cast("long").as("id"),
-      md5(col(textCol).cast("binary")).as("content_hash")))
+      maxPosting: Int = DefaultMaxPosting): SurvivorIndex =
+    bootstrap(df, idCol, textCol, shingleK, nHashes, rowsPerBand, minJaccard,
+      maxBucket, cache,
+      containment = Some(containmentIndex(df, idCol, textCol, cache, maxPosting)))
+
+  /** `idx` (built over the SAME `df`) with the containment tier added:
+    * its at-rest LSH frames are reused as-is and only the cluster state
+    * and decisions are recomputed, now over exact ∪ near ∪ CONTAINMENT
+    * edges. This is the session-catalog shape: one physical LSH index,
+    * two cluster states. The LSH parameters come from `idx`, so the two
+    * states cannot drift apart. */
+  def withContainment(
+      idx: SurvivorIndex,
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      cache: DataFrame => DataFrame = identity,
+      maxPosting: Int = DefaultMaxPosting): SurvivorIndex = {
+    val cont = containmentIndex(df, idCol, textCol, cache, maxPosting)
+    val (clusters, decisions) = clusterState(
+      idx.hashed, idx.banded, idx.bucketSizes, idx.groups, idx.nHashes,
+      idx.minJaccard, idx.maxBucket, Some(cont), cache)
+    idx.copy(clusters = clusters, decisions = decisions, containment = Some(cont._1))
+  }
+
+  /** The LSH frames of a fresh bootstrap, then [[clusterState]]. */
+  private def bootstrap(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleK: Int,
+      nHashes: Int,
+      rowsPerBand: Int,
+      minJaccard: Double,
+      maxBucket: Int,
+      cache: DataFrame => DataFrame,
+      containment: Option[(ContainmentIndex, DataFrame)]): SurvivorIndex = {
+    val hashed = cache(contentHashes(df, idCol, textCol))
     val sigs = cache(minhashSigs(df, idCol, textCol, shingleK, nHashes))
-    val banded = cache(bandedSigs(sigs, nBands, rowsPerBand))
+    val banded = cache(bandedSigs(sigs, nHashes / rowsPerBand, rowsPerBand))
     val bucketSizes = cache(
       banded.groupBy("bucket").agg(count(lit(1)).as("bsz")))
-    val groups = cache(hashed.groupBy("content_hash")
-      .agg(min("id").as("gmin"), count(lit(1)).as("gsz")))
-    val exactEdges = hashed.join(groups, Seq("content_hash"))
-      .where(col("id") =!= col("gmin"))
-      .select(col("id").as("a"), col("gmin").as("b"))
-    // the bootstrap's own near edges reuse the at-rest banded frame + its
-    // census — the last bandedSigs pass this index will ever run
+    val groups = cache(hashGroups(hashed))
+    val (clusters, decisions) = clusterState(hashed, banded, bucketSizes, groups,
+      nHashes, minJaccard, maxBucket, containment, cache)
+    SurvivorIndex(hashed, sigs, banded, bucketSizes, groups, clusters, decisions,
+      shingleK, nHashes, rowsPerBand, minJaccard, maxBucket, containment.map(_._1))
+  }
+
+  /** The one bootstrap tail: LSH frames (+ the containment tier's
+    * standing pairs) → edges → ONE CC → the standing decisions. The near
+    * edges reuse the at-rest banded frame and its census — the last
+    * bandedSigs pass the index ever runs. */
+  private def clusterState(
+      hashed: DataFrame,
+      banded: DataFrame,
+      bucketSizes: DataFrame,
+      groups: DataFrame,
+      nHashes: Int,
+      minJaccard: Double,
+      maxBucket: Int,
+      containment: Option[(ContainmentIndex, DataFrame)],
+      cache: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val withG = withGroups(hashed, groups)
     val nearEdges =
       minhashPairsFromBanded(
         capBucketsWith(banded, bucketSizes, maxBucket), nHashes, minJaccard)
         .select(col("id_a").as("a"), col("id_b").as("b"))
-    // extraEdges: additional (a, b) duplicate evidence the standing
-    // cluster state should contract at bootstrap — the containment tier
-    // of [[buildFullSurvivorIndex]] feeds its edges through here so
-    // idx.clusters is CC over the SAME edge classes every later fold adds
-    val clusters = cache(graft.er.Clustering.connectedComponents(
-      spark, extraEdges.foldLeft(exactEdges.unionByName(nearEdges))(_ unionByName _)))
-    SurvivorIndex(hashed, sigs, banded, bucketSizes, groups, clusters,
-      shingleK, nHashes, rowsPerBand, minJaccard, maxBucket,
-      decisions = cache(assembleDecisions(hashed, groups, clusters, victims = None)))
+    val edges = containment.foldLeft(exactEdges(withG).unionByName(nearEdges))(
+      (e, c) => e.unionByName(containmentEdges(c._2)))
+    val clusters = cache(graft.er.Clustering.connectedComponents(hashed.sparkSession, edges))
+    (clusters, cache(assignTiers(withG.join(clusters, Seq("id"), "left"),
+      containment.map(_._1.victims))))
   }
 
-  /** The (id, survivor_id, tier) assembly over a standing state — the
-    * survivors() tail factored out so the bootstrap can seed
-    * [[SurvivorIndex.decisions]] with exactly the rules every fold
-    * applies (tier precedence keep > exact > contained > near). */
-  private def assembleDecisions(
-      hashed: DataFrame,
-      groups: DataFrame,
-      clusters: DataFrame,
-      victims: Option[DataFrame]): DataFrame = {
-    val base = hashed.join(groups, Seq("content_hash"))
-      .select(col("id"), (col("gsz") > 1).as("has_exact"))
-      .join(clusters, Seq("id"), "left")
-    val withV = victims.foldLeft(base)((d, v) =>
-      d.join(v.withColumn("is_contained", lit(true)), Seq("id"), "left"))
-    val contained =
-      if (victims.isDefined) coalesce(col("is_contained"), lit(false))
-      else lit(false)
-    withV
-      .withColumn("survivor_id", coalesce(col("cluster"), col("id")))
-      .withColumn(
-        "tier",
-        when(col("survivor_id") === col("id"), lit("keep"))
-          .when(col("has_exact"), lit("exact"))
-          .when(contained, lit("contained"))
-          .otherwise(lit("near")))
-      .select(col("id"), col("survivor_id"), col("tier"))
-  }
-
-  /** Incremental survivors fold — the training-data refresh twin of
-    * [[graft.er.Clustering.incrementalClusters]]: fold a batch of NEW
-    * documents into the standing index and return the refreshed
-    * (id, survivor_id, tier) decision table over the union, WITHOUT
-    * re-shingling or re-clustering the standing corpus.
-    *
-    * Per-fold cost tracks the batch: batch signatures + a touched-bucket
-    * probe of the banded LSH index at rest (standing rows reached through
-    * a broadcast semi-join on the batch's bucket deltas — a pruned
-    * partition read when the index is stored bucket-partitioned; the
-    * broadcast assumes batch ≪ corpus, the incremental premise — a
-    * corpus-scale catch-up batch should re-bootstrap via
-    * [[buildSurvivorIndex]] instead), a hash-scale merge of the
-    * exact-dedup index, the contracted incremental CC, and two
-    * node-scale narrow passes for the refreshed tiers. A standing doc's
-    * row CAN change — a batch exact-duplicate flips its victim's tier to
-    * "exact", and merged components change survivor_ids — which is why
-    * the fold re-emits the full table (at 10^12 docs, partition the
-    * rewrite by touched ranges, the [[graft.streaming.Streaming]]
-    * compaction note).
-    *
-    * Exactness: equals `survivors()` over the union exactly as long as
-    * no band bucket exceeds `maxBucket` in either the standing or the
-    * union build — the same declared cap assumption the DuckDB oracle
-    * already makes; an oversized bucket sub-buckets by a census that
-    * differs between the two builds, and both paths are then declared
-    * approximations. The gate proves equality at catalog scale. */
-  def survivorsIncremental(
-      idx: SurvivorIndex,
-      batch: DataFrame,
+  /** The containment tier at rest over `df` (with lang, source), plus its
+    * standing pairs (doc_a, doc_b) for the bootstrap's edges. */
+  private def containmentIndex(
+      df: DataFrame,
       idCol: String,
-      textCol: String): DataFrame =
-    survivorsIncrementalDelta(idx, batch, idCol, textCol).full
+      textCol: String,
+      cache: DataFrame => DataFrame,
+      maxPosting: Int): (ContainmentIndex, DataFrame) = {
+    import graft.queries.Queries
+    val d = df.select(col(idCol).cast("long").as("doc_id"),
+      col("lang"), col("source"), col(textCol).as("text"))
+    val tokFreq = cache(
+      d.select(explode(array_distinct(split(col("text"), " "))).as("tok"))
+        .groupBy("tok").agg(count(lit(1)).as("tf")))
+    val toks = cache(Queries.sortedToksFrozen(d, tokFreq))
+    // the bootstrap's own containment pairs (standing-standing), feeding
+    // edges + victims; localCheckpoint = the two-consumer survivors() rule
+    val cp = Queries.containmentPairsFrom(toks)
+      .select("doc_a", "doc_b").localCheckpoint(true)
+    // posting-list cap at rest (round-6 verdict): census the inverted
+    // index, trim above-cap keys to the maxPosting hash-smallest
+    // containers, keep the trimmed-key census. When no key exceeds the
+    // cap (the catalog regime) the stored relation — and every fold — is
+    // bit-identical to the uncapped index and the window never runs.
+    val contFullRaw = Queries.contFullExplode(toks)
+    val hot = cache(
+      contFullRaw.groupBy("lang", "source", "tok")
+        .agg(count(lit(1)).as("cnt"))
+        .where(col("cnt") > maxPosting))
+    val hotN = hot.count()
+    val contFull =
+      if (hotN == 0L) cache(contFullRaw)
+      else {
+        val dropped = hot.agg(sum(col("cnt") - lit(maxPosting.toLong))).head().getLong(0)
+        System.err.println(
+          s"[graft.dedup.Dedup] containment index: $hotN posting key(s) exceed " +
+            s"maxPosting=$maxPosting — trimmed to the hash-smallest entries " +
+            s"($dropped container postings dropped at rest; containment recall " +
+            "on those keys is a DECLARED approximation — raise maxPosting for " +
+            "the exact regime)")
+        import org.apache.spark.sql.expressions.Window
+        val capKeyUdf = udf(graft.curate.SourceCap.capKey _)
+        val w = Window.partitionBy("lang", "source", "tok")
+          .orderBy(col("pk"), col("doc_b"))
+        cache(contFullRaw
+          .withColumn("pk", capKeyUdf(col("doc_b")))
+          .withColumn("rn", row_number().over(w))
+          .where(col("rn") <= maxPosting)
+          .drop("pk", "rn"))
+      }
+    (ContainmentIndex(tokFreq, toks, cache(Queries.contPrefixExplode(toks)), contFull,
+      cache(victimsOf(cp)), hot, maxPosting, hotN), cp)
+  }
 
   /** A fold's result as (changed rows, full view) — round-6 verdict item
     * 3: the decision table is node-scale but only batch-scale pieces of
@@ -652,22 +787,102 @@ object Dedup {
     * victimhood is monotone. */
   final case class SurvivorDelta(changed: DataFrame, full: DataFrame)
 
+  /** Incremental survivors fold — the training-data refresh twin of
+    * [[graft.er.Clustering.incrementalClustersWithDelta]]: fold a batch
+    * of NEW documents into the standing index and return the refreshed
+    * (id, survivor_id, tier) decisions over the union as a
+    * [[SurvivorDelta]], WITHOUT re-shingling or re-clustering the
+    * standing corpus. When `idx.containment` is defined the fold also
+    * probes the batch's containment pairs and victims against the
+    * containment tier at rest.
+    *
+    * Per-fold cost tracks the batch: batch signatures + a touched-bucket
+    * probe of the banded LSH index at rest (standing rows reached through
+    * a broadcast semi-join on the batch's bucket deltas — a pruned
+    * partition read when the index is stored bucket-partitioned; the
+    * broadcast assumes batch ≪ corpus, the incremental premise — a
+    * corpus-scale catch-up batch should re-bootstrap via
+    * [[buildSurvivorIndex]] instead), a hash-scale merge of the
+    * exact-dedup index, the touched-key containment probe, the
+    * contracted incremental CC, and the tier pass over the changed ids.
+    * A standing doc's row CAN change — a batch exact-duplicate flips its
+    * victim's tier to "exact", merged components change survivor_ids, a
+    * batch container makes a standing doc a victim.
+    *
+    * Exactness: equals `survivors()` over the union (with
+    * `containmentPairs = containmentPairs(union)` for a containment
+    * index) exactly as long as no band bucket exceeds `maxBucket` in
+    * either the standing or the union build — the same declared cap
+    * assumption the DuckDB oracle already makes; an oversized bucket
+    * sub-buckets by a census that differs between the two builds, and
+    * both paths are then declared approximations. The containment token
+    * ORDER differs (frozen vs union frequencies), but order affects only
+    * candidate generation, which is lossless under any consistent total
+    * order. The gate proves equality at catalog scale. */
   def survivorsIncrementalDelta(
       idx: SurvivorIndex,
       batch: DataFrame,
       idCol: String,
       textCol: String): SurvivorDelta = {
     val c = incrCore(idx, batch, idCol, textCol)
-    val newEdges = c.newEdges.localCheckpoint(true)
+    // the batch's containment pairs, when the tier is maintained;
+    // localCheckpoint — the pair table feeds edges + victims (the
+    // survivors() two-consumer rule)
+    val newPairs = idx.containment.map(
+      incrContainmentPairs(_, batch, idCol, textCol).localCheckpoint(true))
+    // edges checkpoint so the banded and containment probes run once, not
+    // once per incrementalClustersWithDelta terminal
+    val newEdges = newPairs.foldLeft(c.newEdges)(_ unionByName containmentEdges(_))
+      .localCheckpoint(true)
     val ccd = graft.er.Clustering.incrementalClustersWithDelta(
       batch.sparkSession, idx.clusters, newEdges)
-    incrAssembleDelta(idx, c, ccd, unionVictims = None, newVictims = None)
+    val newVictims = newPairs.map(victimsOf)
+    val victims = for (ci <- idx.containment; nv <- newVictims)
+      yield ci.victims.unionByName(nv).distinct()
+    val allHashed = idx.hashed.unionByName(c.bHashed)
+    def tiers(hashed: DataFrame, clusters: DataFrame, victims: Option[DataFrame]) =
+      assignTiers(withGroups(hashed, c.merged).join(clusters, Seq("id"), "left"), victims)
+    // batch-CC regime (a corpus-sized batch): deriving a delta would cost
+    // a full compare, so changed == full
+    if (ccd.changedIsFull) {
+      val f = tiers(allHashed, ccd.assignment, victims)
+      return SurvivorDelta(f, f)
+    }
+    // ids whose decision row can differ from the standing table
+    val groupIds = idx.hashed
+      .join(broadcast(c.bHashed.select("content_hash").distinct()), Seq("content_hash"), "left_semi")
+      .select("id")
+    val changedIds = newVictims
+      .foldLeft(c.bHashed.select("id")
+        .unionByName(groupIds)
+        .unionByName(ccd.changed.select("id")))(_ unionByName _)
+      .distinct()
+      .localCheckpoint(true)
+    def onChanged(df: DataFrame) = df.join(broadcast(changedIds), Seq("id"), "left_semi")
+    // cluster labels for the changed ids: relabeled/new ids carry their
+    // fold label; the rest keep their standing label (narrow broadcast
+    // probes of the node-scale tables — the incremental CC shape)
+    val assignForChanged = ccd.changed.unionByName(onChanged(idx.clusters)
+      .join(broadcast(ccd.changed.select("id")), Seq("id"), "left_anti"))
+    val changed = tiers(onChanged(allHashed), assignForChanged, victims.map(onChanged))
+    // full view = unchanged standing rows passed through + the changed rows
+    val full = idx.decisions
+      .join(broadcast(changedIds), Seq("id"), "left_anti")
+      .unionByName(changed)
+    SurvivorDelta(changed, full)
   }
 
-  /** The batch-scale pieces shared by [[survivorsIncremental]] and
-    * [[survivorsFullIncremental]]: batch hashes, the merged exact-dedup
-    * index, and the new exact/relink/near edges (UN-truncated — the
-    * caller checkpoints after unioning any extra edge tiers). */
+  /** Compatibility name for the benchmark harness under `perfbench/`,
+    * which is compiled against it; the engine calls
+    * [[survivorsIncrementalDelta]]. */
+  def survivorsFullIncrementalDelta(
+      idx: SurvivorIndex, batch: DataFrame, idCol: String, textCol: String): SurvivorDelta =
+    survivorsIncrementalDelta(idx, batch, idCol, textCol)
+
+  /** The batch-scale pieces of a fold: batch hashes, the merged
+    * exact-dedup index, and the new exact/relink/near edges
+    * (UN-truncated — the fold checkpoints after unioning the containment
+    * edges, when maintained). */
   private final case class IncrCore(
       bHashed: DataFrame, merged: DataFrame, newEdges: DataFrame)
 
@@ -677,16 +892,15 @@ object Dedup {
       idCol: String,
       textCol: String): IncrCore = {
     val nBands = idx.nHashes / idx.rowsPerBand
-    val bHashed = batch.select(
-      col(idCol).cast("long").as("id"),
-      md5(col(textCol).cast("binary")).as("content_hash"))
-    val bSigs = persistSig(
-      minhashSigs(batch, idCol, textCol, idx.shingleK, idx.nHashes))
+    val bHashed = contentHashes(batch, idCol, textCol)
+    // not persisted: the signatures' one consumer is the band table,
+    // checkpointed below
+    val bSigs = minhashSigs(batch, idCol, textCol, idx.shingleK, idx.nHashes)
 
     // exact-dedup index merge: min of mins, sum of counts (hash-scale).
     // localCheckpoint: merged feeds FOUR consumers (eBatch, eRelink, and
-    // the tier pass twice through the edge plans) and the edges feed
-    // incrementalClusters' three terminal points — without eager
+    // the tier pass twice through the edge plans) and the edges feed the
+    // incremental CC's three terminal points — without eager
     // materialization the corpus-scale index scans re-run per consumer
     // (blocks reclaimed by the ContextCleaner, the EvalParagraphs
     // pattern; at deployment this materialization IS the next index
@@ -706,9 +920,7 @@ object Dedup {
     // new exact edges: every batch doc to its union group min, plus a
     // relink edge when a batch doc took over a standing group's min (the
     // standing members already connect to the OLD min in idx.clusters)
-    val eBatch = bHashed.join(merged, Seq("content_hash"))
-      .where(col("id") =!= col("gmin"))
-      .select(col("id").as("a"), col("gmin").as("b"))
+    val eBatch = exactEdges(withGroups(bHashed, merged))
     val eRelink = merged
       .where(col("smin").isNotNull && col("smin") =!= col("gmin"))
       .select(col("smin").as("a"), col("gmin").as("b"))
@@ -783,219 +995,15 @@ object Dedup {
     IncrCore(bHashed, merged, eBatch.unionByName(eRelink).unionByName(near))
   }
 
-  /** The refreshed decision table over the union (same rules — and the
-    * same tier precedence keep > exact > contained > near — as
-    * [[survivors]]). `victims` carries the union containment-victim set
-    * when the fold maintains the containment tier. */
-  private def incrAssemble(
-      idx: SurvivorIndex,
-      c: IncrCore,
-      clusters2: DataFrame,
-      victims: Option[DataFrame]): DataFrame = {
-    val base = idx.hashed.unionByName(c.bHashed)
-      .join(c.merged.select(col("content_hash"), col("gsz")), Seq("content_hash"))
-      .select(col("id"), (col("gsz") > 1).as("has_exact"))
-      .join(clusters2, Seq("id"), "left")
-    // victim flag via a left join, NOT a broadcast hint (the survivors()
-    // rule): victim volume is corpus-derived; AQE broadcasts it from
-    // runtime stats while it fits
-    val withV = victims.foldLeft(base)((d, v) =>
-      d.join(v.withColumn("is_contained", lit(true)), Seq("id"), "left"))
-    val contained =
-      if (victims.isDefined) coalesce(col("is_contained"), lit(false))
-      else lit(false)
-    withV
-      .withColumn("survivor_id", coalesce(col("cluster"), col("id")))
-      .withColumn(
-        "tier",
-        when(col("survivor_id") === col("id"), lit("keep"))
-          .when(col("has_exact"), lit("exact"))
-          .when(contained, lit("contained"))
-          .otherwise(lit("near")))
-      .select(col("id"), col("survivor_id"), col("tier"))
-  }
-
-  // ---------- containment-aware incremental index -----------------------------
-
-  /** [[SurvivorIndex]] extended with the CONTAINMENT index at rest — the
-    * standing state behind [[survivorsFullIncremental]] (the incremental
-    * twin of `survivors(..., containmentPairs = ...)`):
-    *   - `tokFreq` (tok, tf): the FROZEN rare-first token order (standing
-    *     corpus frequencies). Frozen deliberately: the prefix filter is
-    *     lossless under ANY total order applied consistently, so folds
-    *     sort batch tokens under the bootstrap order (unseen → tf 0,
-    *     ties by token string) instead of re-counting the corpus;
-    *   - `toks` (doc_id, lang, source, n, stoks): standing docs' distinct
-    *     tokens sorted by that order (the verification relation);
-    *   - `contPrefix` (lang, source, doc_a, na, tok): standing prefix
-    *     explode — probed when a BATCH doc may contain a standing one;
-    *   - `contFull` (lang, source, doc_b, nb, tok): the standing inverted
-    *     index — probed when a batch doc is contained in a standing one.
-    *     At deployment both are stored partitioned by token, so a fold's
-    *     touched-token semi-join is a pruned read (the `banded` rule);
-    *   - `victims` (id): standing containment victims. Monotone — docs
-    *     never leave the corpus, so a standing victim stays one.
-    * `core.clusters` is CC over exact ∪ near ∪ CONTAINMENT edges (built
-    * via buildSurvivorIndex's extraEdges hook), matching the edge classes
-    * every fold adds. */
-  final case class FullSurvivorIndex(
-      core: SurvivorIndex,
-      tokFreq: DataFrame,
-      toks: DataFrame,
-      contPrefix: DataFrame,
-      contFull: DataFrame,
-      victims: DataFrame,
-      /** Posting keys whose AT-REST inverted-index list was trimmed to
-        * `maxPosting` entries (lang, source, tok, cnt — the census kept
-        * at rest; EMPTY in the exact regime). See [[DefaultMaxPosting]]. */
-      hotPostings: DataFrame = null,
-      maxPosting: Int = DefaultMaxPosting,
-      /** Number of trimmed posting keys, counted once at bootstrap: 0
-        * means the cap never bound and every fold is exact — folds skip
-        * the dropped-candidate accounting job entirely. */
-      hotPostingCount: Long = 0L) {
-    def frames: Seq[DataFrame] =
-      core.frames ++ Seq(tokFreq, toks, contPrefix, contFull, victims) ++
-        Option(hotPostings).toSeq
-  }
-
-  /** Cap on the containment inverted index's posting list per
-    * (lang, source, token) AT REST — the round-6 verdict's fix for the
-    * one unbounded read in the containment fold: a hot token (new
-    * boilerplate entering the corpus) otherwise yields a posting read
-    * that grows with the corpus, since containment has no size-ratio
-    * bound to trim the container side with. Entries kept are the
-    * maxPosting hash-smallest container docs (splitmix64 order — the
-    * SourceCap discipline, deterministic and unbiased); the trimmed
-    * keys' census stays at rest and every bootstrap/fold in the capped
-    * regime LOGS its dropped-candidate count (no silent truncation).
-    * Above-cap trimming makes containment recall on those keys a
-    * DECLARED approximation (the DefaultMaxBucket precedent); the cap is
-    * far above the catalog's posting sizes, so the oracle gate runs in
-    * the exact regime. */
-  val DefaultMaxPosting: Int = 4096
-
-  /** Bootstrap the containment-aware standing index. `df` must carry
-    * (idCol, textCol, lang, source) — containment blocks within
-    * (lang, source), the catalog convention (Queries.containmentPairs).
-    *
-    * `reuseCore`: a [[SurvivorIndex]] already built over the SAME `df`
-    * with the SAME parameters (enforced) — its at-rest frames (hashes,
-    * signatures, banded index, census, groups) are reused as-is and only
-    * the cluster state is recomputed, now over exact ∪ near ∪
-    * CONTAINMENT edges (the full index's clusters must contract the same
-    * edge classes every fold adds; the core's clusters lack the
-    * containment tier). This is the session-catalog shape: one physical
-    * LSH index, two cluster states. */
-  def buildFullSurvivorIndex(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 5,
-      nHashes: Int = 64,
-      rowsPerBand: Int = 8,
-      minJaccard: Double = 0.5,
-      maxBucket: Int = DefaultMaxBucket,
-      cache: DataFrame => DataFrame = identity,
-      reuseCore: Option[SurvivorIndex] = None,
-      maxPosting: Int = DefaultMaxPosting): FullSurvivorIndex = {
-    import graft.queries.Queries
-    val d = df.select(col(idCol).cast("long").as("doc_id"),
-      col("lang"), col("source"), col(textCol).as("text"))
-    val tokFreq = cache(
-      d.select(explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("tf")))
-    val toks = cache(Queries.sortedToksFrozen(d, tokFreq))
-    // the bootstrap's own containment pairs (standing-standing), feeding
-    // edges + victims; localCheckpoint = the two-consumer survivors() rule
-    val cp = Queries.containmentPairsFrom(toks)
-      .select("doc_a", "doc_b").localCheckpoint(true)
-    val contEdges = cp.select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val core = reuseCore match {
-      case Some(c) =>
-        require(c.shingleK == shingleK && c.nHashes == nHashes &&
-          c.rowsPerBand == rowsPerBand && c.minJaccard == minJaccard &&
-          c.maxBucket == maxBucket,
-          "reuseCore parameter drift: the supplied index was built with " +
-            s"(shingleK=${c.shingleK}, nHashes=${c.nHashes}, rowsPerBand=${c.rowsPerBand}, " +
-            s"minJaccard=${c.minJaccard}, maxBucket=${c.maxBucket}) but buildFullSurvivorIndex " +
-            s"runs with (shingleK=$shingleK, nHashes=$nHashes, rowsPerBand=$rowsPerBand, " +
-            s"minJaccard=$minJaccard, maxBucket=$maxBucket)")
-        // re-derive the edge classes from the AT-REST frames (no second
-        // shingling/banding pass) and re-cluster with containment in
-        val exactEdges = c.hashed.join(c.groups, Seq("content_hash"))
-          .where(col("id") =!= col("gmin"))
-          .select(col("id").as("a"), col("gmin").as("b"))
-        val nearEdges = minhashPairsFromBanded(
-          capBucketsWith(c.banded, c.bucketSizes, c.maxBucket),
-          c.nHashes, c.minJaccard)
-          .select(col("id_a").as("a"), col("id_b").as("b"))
-        val clusters = cache(graft.er.Clustering.connectedComponents(
-          df.sparkSession,
-          exactEdges.unionByName(nearEdges).unionByName(contEdges)))
-        c.copy(clusters = clusters)
-      case None =>
-        buildSurvivorIndex(df, idCol, textCol, shingleK, nHashes,
-          rowsPerBand, minJaccard, maxBucket, cache,
-          extraEdges = Some(contEdges))
-    }
-    // posting-list cap at rest (round-6 verdict): census the inverted
-    // index, trim above-cap keys to the maxPosting hash-smallest
-    // containers, keep the trimmed-key census. When no key exceeds the
-    // cap (the catalog regime) the stored relation — and every fold — is
-    // bit-identical to the uncapped index and the window never runs.
-    val contFullRaw = Queries.contFullExplode(toks)
-    val hot = cache(
-      contFullRaw.groupBy("lang", "source", "tok")
-        .agg(count(lit(1)).as("cnt"))
-        .where(col("cnt") > maxPosting))
-    val hotN = hot.count()
-    val contFull =
-      if (hotN == 0L) cache(contFullRaw)
-      else {
-        val dropped = hot.agg(sum(col("cnt") - lit(maxPosting.toLong))).head().getLong(0)
-        System.err.println(
-          s"[graft.dedup.Dedup] containment index: $hotN posting key(s) exceed " +
-            s"maxPosting=$maxPosting — trimmed to the hash-smallest entries " +
-            s"($dropped container postings dropped at rest; containment recall " +
-            "on those keys is a DECLARED approximation — raise maxPosting for " +
-            "the exact regime)")
-        import org.apache.spark.sql.expressions.Window
-        val capKeyUdf = udf(graft.curate.SourceCap.capKey _)
-        val w = Window.partitionBy("lang", "source", "tok")
-          .orderBy(col("pk"), col("doc_b"))
-        cache(contFullRaw
-          .withColumn("pk", capKeyUdf(col("doc_b")))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= maxPosting)
-          .drop("pk", "rn"))
-      }
-    val victimsFrame = cache(cp.select(col("doc_a").as("id")).distinct())
-    // the FULL index's standing decisions are CONTAINMENT-AWARE (victims
-    // flagged, clusters over all three edge tiers) — they must not share
-    // the plain core's decision table (two cluster states, two decision
-    // tables; the reuseCore shape shares only the at-rest LSH frames)
-    val coreWithDecisions = core.copy(decisions =
-      cache(assembleDecisions(core.hashed, core.groups, core.clusters,
-        victims = Some(victimsFrame))))
-    FullSurvivorIndex(coreWithDecisions, tokFreq, toks,
-      cache(Queries.contPrefixExplode(toks)),
-      contFull,
-      victimsFrame,
-      hotPostings = hot,
-      maxPosting = maxPosting,
-      hotPostingCount = hotN)
-  }
-
   /** New containment pairs a batch introduces against the standing index
     * (and within itself) — both directions, candidates probed only at
     * the (lang, source, tok) keys the batch touches (broadcast semi-joins
     * on batch-derived key sets: the batch ≪ corpus premise shared with
     * the banded probe; a pruned partition read when the index is stored
     * token-partitioned). Standing-standing pairs are already contracted
-    * in core.clusters / victims, so untouched keys cannot contribute. */
+    * in idx.clusters / ci.victims, so untouched keys cannot contribute. */
   private def incrContainmentPairs(
-      fidx: FullSurvivorIndex,
+      ci: ContainmentIndex,
       batch: DataFrame,
       idCol: String,
       textCol: String): DataFrame = {
@@ -1004,7 +1012,7 @@ object Dedup {
       col("lang"), col("source"), col(textCol).as("text"))
     // batch tokens under the FROZEN order; localCheckpoint: feeds four
     // consumers (both explodes + the union verification relation)
-    val bToks = Queries.sortedToksFrozen(b, fidx.tokFreq).localCheckpoint(true)
+    val bToks = Queries.sortedToksFrozen(b, ci.tokFreq).localCheckpoint(true)
     val bPref = Queries.contPrefixExplode(bToks)
     val bFull = Queries.contFullExplode(bToks)
     // capped-regime accounting (no silent truncation): when the standing
@@ -1012,24 +1020,24 @@ object Dedup {
     // candidates this batch's prefix tokens can no longer reach and log
     // them. Skipped entirely in the exact regime (hotPostingCount == 0 —
     // the catalog gate's regime), so the exact path pays no extra job.
-    if (fidx.hotPostingCount > 0L) {
+    if (ci.hotPostingCount > 0L) {
       val dropped = bPref.select("lang", "source", "tok").distinct()
-        .join(fidx.hotPostings, Seq("lang", "source", "tok"))
-        .agg(coalesce(sum(col("cnt") - lit(fidx.maxPosting.toLong)), lit(0L)))
+        .join(ci.hotPostings, Seq("lang", "source", "tok"))
+        .agg(coalesce(sum(col("cnt") - lit(ci.maxPosting.toLong)), lit(0L)))
         .head().getLong(0)
       if (dropped > 0L) System.err.println(
         s"[graft.dedup.Dedup] containment fold: batch prefix tokens hit trimmed " +
           s"posting keys — $dropped standing container candidate(s) were not " +
-          s"probed (maxPosting=${fidx.maxPosting} cap; declared approximation)")
+          s"probed (maxPosting=${ci.maxPosting} cap; declared approximation)")
     }
     // direction 1: contained = batch doc, container = union
-    val standingFull = fidx.contFull.join(
+    val standingFull = ci.contFull.join(
       broadcast(bPref.select("lang", "source", "tok").distinct()),
       Seq("lang", "source", "tok"), "left_semi")
     val cand1 = bPref.join(standingFull.unionByName(bFull),
       Seq("lang", "source", "tok"))
     // direction 2: contained = standing doc, container = batch doc
-    val standingPref = fidx.contPrefix.join(
+    val standingPref = ci.contPrefix.join(
       broadcast(bFull.select("lang", "source", "tok").distinct()),
       Seq("lang", "source", "tok"), "left_semi")
     val cand2 = standingPref.join(bFull, Seq("lang", "source", "tok"))
@@ -1041,7 +1049,7 @@ object Dedup {
       .select("doc_a", "doc_b").distinct()
     // integer verification against the union token relation (candidates
     // are batch-scale; AQE broadcasts them into the corpus-scale fetches)
-    val allToks = fidx.toks.unionByName(bToks)
+    val allToks = ci.toks.unionByName(bToks)
     cands
       .join(allToks.select(col("doc_id").as("doc_a"),
         col("stoks").as("toks_a"), col("n").as("n_a")), Seq("doc_a"))
@@ -1051,107 +1059,6 @@ object Dedup {
         size(array_intersect(col("toks_a"), col("toks_b"))).cast("bigint"))
       .where(col("inter") * lit(5) >= col("n_a") * lit(4))
       .select("doc_a", "doc_b")
-  }
-
-  /** Containment-aware incremental survivors — the fold for
-    * [[FullSurvivorIndex]], equal to
-    * `survivors(union, ..., containmentPairs = containmentPairs(union))`
-    * exactly (the token ORDER differs — frozen vs union frequencies —
-    * but order affects only candidate generation, which is lossless
-    * under any consistent total order; the integer verification and the
-    * tier rules are identical). The oracle gates that equality. */
-  def survivorsFullIncremental(
-      fidx: FullSurvivorIndex,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame =
-    survivorsFullIncrementalDelta(fidx, batch, idCol, textCol).full
-
-  /** The containment-aware fold with its changed-row set exposed (see
-    * [[SurvivorDelta]]). */
-  def survivorsFullIncrementalDelta(
-      fidx: FullSurvivorIndex,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String): SurvivorDelta = {
-    val idx = fidx.core
-    val c = incrCore(idx, batch, idCol, textCol)
-    // localCheckpoint: the new pair table feeds edges + victims (the
-    // survivors() two-consumer rule); edges checkpoint so the banded and
-    // containment probes run once, not per incrementalClusters terminal
-    val newCont = incrContainmentPairs(fidx, batch, idCol, textCol)
-      .localCheckpoint(true)
-    val newEdges = c.newEdges
-      .unionByName(newCont.select(col("doc_a").as("a"), col("doc_b").as("b")))
-      .localCheckpoint(true)
-    val ccd = graft.er.Clustering.incrementalClustersWithDelta(
-      batch.sparkSession, idx.clusters, newEdges)
-    val newVictims = newCont.select(col("doc_a").as("id")).distinct()
-    val victims = fidx.victims.unionByName(newVictims).distinct()
-    incrAssembleDelta(idx, c, ccd,
-      unionVictims = Some(victims), newVictims = Some(newVictims))
-  }
-
-  /** The delta-emitting assembly behind both folds. Falls back to the
-    * legacy full re-derivation when the index carries no standing
-    * decision table or the CC fold hit the fallback (corpus-sized batch)
-    * regime — there `changed == full`. */
-  private def incrAssembleDelta(
-      idx: SurvivorIndex,
-      c: IncrCore,
-      ccd: graft.er.Clustering.IncrementalCc,
-      unionVictims: Option[DataFrame],
-      newVictims: Option[DataFrame]): SurvivorDelta = {
-    if (idx.decisions == null || ccd.changedIsFull) {
-      val f = incrAssemble(idx, c, ccd.assignment, victims = unionVictims)
-      return SurvivorDelta(f, f)
-    }
-    // ids whose decision row can differ from the standing table
-    val touchedHashes = c.bHashed.select("content_hash").distinct()
-    val groupIds = idx.hashed
-      .join(broadcast(touchedHashes), Seq("content_hash"), "left_semi")
-      .select("id")
-    val changedIds = newVictims
-      .foldLeft(c.bHashed.select("id")
-        .unionByName(groupIds)
-        .unionByName(ccd.changed.select("id")))(_ unionByName _.select("id"))
-      .distinct()
-      .localCheckpoint(true)
-    // cluster labels for the changed ids: relabeled/new ids carry their
-    // fold label; the rest keep their standing label (narrow broadcast
-    // probes of the node-scale tables — the incrementalClusters shape)
-    val fromCc = ccd.changed
-    val standingAssign = idx.clusters
-      .join(broadcast(changedIds), Seq("id"), "left_semi")
-      .join(broadcast(fromCc.select("id")), Seq("id"), "left_anti")
-    val assignForChanged = fromCc.unionByName(standingAssign)
-    // tier assembly restricted to the changed ids (the survivors() rules)
-    val restricted = idx.hashed.unionByName(c.bHashed)
-      .join(broadcast(changedIds), Seq("id"), "left_semi")
-    val base = restricted
-      .join(c.merged.select(col("content_hash"), col("gsz")), Seq("content_hash"))
-      .select(col("id"), (col("gsz") > 1).as("has_exact"))
-      .join(assignForChanged, Seq("id"), "left")
-    val withV = unionVictims.foldLeft(base)((d, v) =>
-      d.join(v.join(broadcast(changedIds), Seq("id"), "left_semi")
-        .withColumn("is_contained", lit(true)), Seq("id"), "left"))
-    val contained =
-      if (unionVictims.isDefined) coalesce(col("is_contained"), lit(false))
-      else lit(false)
-    val changed = withV
-      .withColumn("survivor_id", coalesce(col("cluster"), col("id")))
-      .withColumn(
-        "tier",
-        when(col("survivor_id") === col("id"), lit("keep"))
-          .when(col("has_exact"), lit("exact"))
-          .when(contained, lit("contained"))
-          .otherwise(lit("near")))
-      .select(col("id"), col("survivor_id"), col("tier"))
-    // full view = unchanged standing rows passed through + the changed rows
-    val full = idx.decisions
-      .join(broadcast(changedIds), Seq("id"), "left_anti")
-      .unionByName(changed)
-    SurvivorDelta(changed, full)
   }
 
   // ---------- embedding cosine ------------------------------------------------

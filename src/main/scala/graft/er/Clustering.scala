@@ -473,9 +473,10 @@ object Clustering {
     *
     * `oldClusters`: DataFrame(id, cluster) whose labels are component
     * MINIMA — the invariant every CC entry point here guarantees.
-    * `newEdges`: DataFrame(a, b). Returns (id, cluster) for the union
-    * graph (old ids plus new-edge endpoints), identical to running batch
-    * CC over (old edges ∪ new edges) — see ClusteringSpec's incremental
+    * `newEdges`: DataFrame(a, b). Returns an [[IncrementalCc]] whose
+    * `assignment` is (id, cluster) for the union graph (old ids plus
+    * new-edge endpoints), identical to running batch CC over
+    * (old edges ∪ new edges) — see ClusteringSpec's incremental
     * property tests and PlanAuditSpec's broadcast-only plan pin.
     *
     * Why it is exact: contracting every old component to its label
@@ -529,16 +530,21 @@ object Clustering {
     * `checkpointDir` applies to the broadcast and batch-CC regimes, whose
     * contracted CC may run the star loop; the driver regime has no
     * rounds. */
-  def incrementalClusters(
+  def incrementalClustersWithDelta(
       spark: SparkSession,
       oldClusters: DataFrame,
       newEdges: DataFrame,
       checkpointDir: Option[String] = None,
-      broadcastMaxEndpoints: Long = 5000000L): DataFrame =
-    incrementalClustersWithDelta(spark, oldClusters, newEdges,
-      checkpointDir, broadcastMaxEndpoints).assignment
+      broadcastMaxEndpoints: Long = 5000000L): IncrementalCc = {
+    val oc = oldClusters.select(col("id").cast("long"), col("cluster").cast("long"))
+    val e = newEdges
+      .select(col("a").cast("long"), col("b").cast("long"))
+      .where(col("a") =!= col("b"))
+    driverFold(spark, oc, e, broadcastMaxEndpoints)
+      .getOrElse(broadcastFold(spark, oc, e, checkpointDir, broadcastMaxEndpoints))
+  }
 
-  /** Which [[incrementalClusters]] regime folded a batch. */
+  /** Which [[incrementalClustersWithDelta]] regime folded a batch. */
   sealed trait Regime
   object Regime {
     case object Driver extends Regime
@@ -546,8 +552,8 @@ object Clustering {
     case object BatchCc extends Regime
   }
 
-  /** [[incrementalClusters]]' result together with its CHANGED-ROW set —
-    * what a touched-range state writer persists per fold (round-7: the
+  /** The fold's assignment together with its CHANGED-ROW set — what a
+    * touched-range state writer persists per fold (round-7: the
     * streaming sink's per-fold write volume must track the batch, not
     * the corpus-scale assignment):
     *   - `assignment`: the full refreshed (id, cluster) table (lazy —
@@ -569,21 +575,7 @@ object Clustering {
     def changedIsFull: Boolean = regime == Regime.BatchCc
   }
 
-  def incrementalClustersWithDelta(
-      spark: SparkSession,
-      oldClusters: DataFrame,
-      newEdges: DataFrame,
-      checkpointDir: Option[String] = None,
-      broadcastMaxEndpoints: Long = 5000000L): IncrementalCc = {
-    val oc = oldClusters.select(col("id").cast("long"), col("cluster").cast("long"))
-    val e = newEdges
-      .select(col("a").cast("long"), col("b").cast("long"))
-      .where(col("a") =!= col("b"))
-    driverFold(spark, oc, e, broadcastMaxEndpoints)
-      .getOrElse(broadcastFold(spark, oc, e, checkpointDir, broadcastMaxEndpoints))
-  }
-
-  /** The driver regime of [[incrementalClusters]]: one bounded collect,
+  /** The driver regime of [[incrementalClustersWithDelta]]: one bounded collect,
     * one probe, a driver union-find. None when a task's contracted edges
     * exceed its share of the budget, or the batch's distinct endpoints
     * exceed `broadcastMaxEndpoints` (the other regimes take over). */
@@ -647,7 +639,7 @@ object Clustering {
       Regime.Driver, emptyBatch = false))
   }
 
-  /** The broadcast and batch-CC regimes of [[incrementalClusters]]. */
+  /** The broadcast and batch-CC regimes of [[incrementalClustersWithDelta]]. */
   private def broadcastFold(
       spark: SparkSession,
       oc: DataFrame,
@@ -715,7 +707,7 @@ object Clustering {
       Regime.Broadcast, emptyBatch = nEndpoints == 0)
   }
 
-  /** The guarded fallback of [[incrementalClusters]] for batches too big
+  /** The guarded fallback of [[incrementalClustersWithDelta]] for batches too big
     * to broadcast: batch CC over {standing-assignment star edges ∪ new
     * edges}. Exact by the same min-label argument — each (id, cluster)
     * assignment row with id ≠ cluster is an edge of a star whose center

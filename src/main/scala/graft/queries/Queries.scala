@@ -370,7 +370,7 @@ object Queries {
 
   /** [[q15SortedToks]] under a CALLER-SUPPLIED (frozen) token-frequency
     * table instead of frequencies recomputed from `docs` — the
-    * incremental-containment shape (Dedup.FullSurvivorIndex): the standing
+    * incremental-containment shape (Dedup.ContainmentIndex): the standing
     * index freezes its corpus order at bootstrap and sorts every later
     * batch's tokens under the SAME order, so the prefix-filter argument
     * (any consistent total order is lossless) keeps holding across folds.
@@ -401,7 +401,7 @@ object Queries {
         col("n").as("na"), explode(col("prefix")).as("tok"))
 
   /** The container-side full explode — the inverted-index relation (the
-    * containment index at rest in Dedup.FullSurvivorIndex; at deployment
+    * containment index at rest in Dedup.ContainmentIndex; at deployment
     * stored partitioned by token so a fold's touched-token semi-join is a
     * pruned read). */
   private[graft] def contFullExplode(sorted: DataFrame): DataFrame =

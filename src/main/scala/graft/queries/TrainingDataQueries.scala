@@ -293,25 +293,22 @@ object TrainingDataQueries {
     * the SAME batch-survivors SQL over the full table, so the gate
     * proves incremental == batch exactly. */
   def ddSurvivorsIncr(spark: SparkSession, dir: String): DataFrame =
-    Dedup.survivorsIncremental(
+    Dedup.survivorsIncrementalDelta(
       survivorIndexShared(spark, dir),
-      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text")
+      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text").full
 
   /** Session memo of the CONTAINMENT-AWARE standing index (the
     * survivorIdxMemo pattern — one bootstrap per session). */
   private val fullSurvIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.FullSurvivorIndex]()
+    new java.util.concurrent.ConcurrentHashMap[String, Dedup.SurvivorIndex]()
 
-  private[graft] def fullSurvivorIndexShared(spark: SparkSession, dir: String): Dedup.FullSurvivorIndex =
+  private[graft] def fullSurvivorIndexShared(spark: SparkSession, dir: String): Dedup.SurvivorIndex =
     graft.util.SessionMemo.cachedEntry(fullSurvIdxMemo, spark, dir)(
-      Dedup.buildFullSurvivorIndex(
+      // one physical LSH index per session: reuse the plain memo's
+      // at-rest frames, recompute only the containment-aware clusters
+      Dedup.withContainment(survivorIndexShared(spark, dir),
         docs(spark, dir).where(!incrIsNewDoc), "doc_id", "text",
-        shingleK = MhShingleK, nHashes = MhNHashes, rowsPerBand = MhRowsPerBand,
-        minJaccard = MhMinJaccard, maxBucket = Dedup.DefaultMaxBucket,
-        cache = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-        // one physical LSH index per session: reuse the core memo's
-        // at-rest frames, recompute only the containment-aware clusters
-        reuseCore = Some(survivorIndexShared(spark, dir)))) { idx =>
+        cache = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))) { idx =>
       idx.frames
         .foreach(f => try f.unpersist(false) catch { case _: Throwable => () })
     }
@@ -324,9 +321,9 @@ object TrainingDataQueries {
     * full containment dump, so the gate proves incremental == batch for
     * the fused verdict exactly. */
   def ddSurvivorsFullIncr(spark: SparkSession, dir: String): DataFrame =
-    Dedup.survivorsFullIncremental(
+    Dedup.survivorsIncrementalDelta(
       fullSurvivorIndexShared(spark, dir),
-      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text")
+      docs(spark, dir).where(incrIsNewDoc), "doc_id", "text").full
 
   def ddEmbeddingDups(spark: SparkSession, dir: String): DataFrame =
     Dedup.embeddingDupPairs(embs(spark, dir), "vec_id", "embedding",

@@ -162,7 +162,7 @@ object Ann extends Serializable {
     * land in their cells. Frozen deliberately — assignment and probing
     * only need a consistent cell geometry; recall degrades only when the
     * data DISTRIBUTION drifts, which is a re-index decision, not a fold
-    * (the frozen-token-order argument of Dedup.FullSurvivorIndex). */
+    * (the frozen-token-order argument of Dedup.ContainmentIndex). */
   final case class IvfIndex(
       assigned: DataFrame,
       centroids: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]])

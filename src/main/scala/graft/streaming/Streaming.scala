@@ -175,7 +175,7 @@ object Streaming {
   }
 
   /** Streaming CLUSTER MAINTENANCE — the streaming twin of G7
-    * ([[graft.er.Clustering.incrementalClusters]]): match edges stream in
+    * ([[graft.er.Clustering.incrementalClustersWithDelta]]): match edges stream in
     * (e.g. from [[streamingMinhashPairs]] or a streaming scorer) and every
     * micro-batch is folded into a standing (id, cluster) assignment kept
     * as Parquet state-at-rest under `stateDir`.
@@ -184,11 +184,11 @@ object Streaming {
     * global fixpoint, not a per-key fold — `mapGroupsWithState` cannot
     * express a merge that spans keys, so the engine-sanctioned shape is a
     * micro-batch sink that runs the batch-scale contracted CC and
-    * rewrites the assignment via incrementalClusters' two narrow passes.
+    * rewrites the assignment via incrementalClustersWithDelta's narrow passes.
     *
     * Exactness and recovery:
     *   - After every batch the standing assignment equals batch CC over
-    *     ALL edges seen so far (induction over incrementalClusters'
+    *     ALL edges seen so far (induction over incrementalClustersWithDelta's
     *     min-label proof; StreamingSpec checks two-wave == batch).
     *   - Versions are keyed by Structured Streaming's `batchId`, so a
     *     replayed batch (crash between sink commit and offset-log commit)

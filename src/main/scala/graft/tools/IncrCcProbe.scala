@@ -11,7 +11,7 @@ import graft.synth.Synth
   * "daily batch" (1/16 by pair hash — the crawl-increment shape), build
   * the standing assignment once, then time (a) re-running full batch CC
   * over the union vs (b) folding the batch with
-  * [[graft.er.Clustering.incrementalClusters]]. The incremental fold's
+  * [[graft.er.Clustering.incrementalClustersWithDelta]]. The incremental fold's
   * cost should track the BATCH size (contracted CC + two narrow passes
   * over the assignment), not the corpus — the number BASELINE.md cites
   * for the G7 scale claim. */
@@ -50,14 +50,14 @@ object IncrCcProbe {
     (1 to 3).foreach { i =>
       time(s"full_batch_cc_$i") { Clustering.assign(spark, ids, edges).count() }
       time(s"incremental_fold_$i") {
-        Clustering.incrementalClusters(spark, standing, batchEdges).count()
+        Clustering.incrementalClustersWithDelta(spark, standing, batchEdges).assignment.count()
       }
     }
     // exactness at probe scale: the folded assignment equals batch CC —
     // counts compared too, or a dropped/duplicated id would be invisible
     // to the inner join and the mismatch count would be vacuously 0
     val full = Clustering.assign(spark, ids, edges).cache()
-    val incr = Clustering.incrementalClusters(spark, standing, batchEdges).cache()
+    val incr = Clustering.incrementalClustersWithDelta(spark, standing, batchEdges).assignment.cache()
     val (nFull, nIncr) = (full.count(), incr.count())
     val joined = full.as("f").join(incr.as("i"), Seq("id")).cache()
     val diff = joined.where(col("f.cluster") =!= col("i.cluster")).count()

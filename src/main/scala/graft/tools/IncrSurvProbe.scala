@@ -68,7 +68,7 @@ object IncrSurvProbe {
       var best = Double.MaxValue
       (1 to 2).foreach { i =>
         val t0 = System.nanoTime()
-        Dedup.survivorsIncremental(ix, batch, "doc_id", "text").count()
+        Dedup.survivorsIncrementalDelta(ix, batch, "doc_id", "text").full.count()
         Dedup.releaseSignatures()
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
       }
@@ -88,7 +88,7 @@ object IncrSurvProbe {
     // same fixed batch, full index (exact + near + containment at rest)
     // at 1x and 13x standing — the containment probe should track the
     // batch's touched (lang, source, token) keys, not the corpus
-    def buildFull(name: String, standing: DataFrame): Dedup.FullSurvivorIndex = {
+    def buildFull(name: String, standing: DataFrame): Dedup.SurvivorIndex = {
       val ix = Dedup.buildFullSurvivorIndex(standing, "doc_id", "text",
         minJaccard = 0.35,
         cache = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -97,11 +97,11 @@ object IncrSurvProbe {
       }
       ix
     }
-    def foldFullTimes(name: String, ix: Dedup.FullSurvivorIndex): Unit = {
+    def foldFullTimes(name: String, ix: Dedup.SurvivorIndex): Unit = {
       var best = Double.MaxValue
       (1 to 2).foreach { _ =>
         val t0 = System.nanoTime()
-        Dedup.survivorsFullIncremental(ix, batch, "doc_id", "text").count()
+        Dedup.survivorsIncrementalDelta(ix, batch, "doc_id", "text").full.count()
         Dedup.releaseSignatures()
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
       }
@@ -161,7 +161,7 @@ object IncrSurvProbe {
     val edges = eBatch.unionByName(eRelink).unionByName(near).cache()
     time("edges")(edges.count())
     val c2 = time("incr_cc")(
-      { val c = graft.er.Clustering.incrementalClusters(spark, idx.clusters, edges).cache(); c.count(); c })
+      { val c = graft.er.Clustering.incrementalClustersWithDelta(spark, idx.clusters, edges).assignment.cache(); c.count(); c })
     time("tier_pass")(
       idx.hashed.unionByName(bHashed)
         .join(merged.select(col("content_hash"), col("gsz")), Seq("content_hash"))

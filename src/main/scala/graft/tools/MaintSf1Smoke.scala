@@ -68,7 +68,7 @@ object MaintSf1Smoke {
     var bestFold = Double.MaxValue
     (1 to 2).foreach { _ =>
       val t0 = System.nanoTime()
-      val n = Dedup.survivorsIncremental(idx, batch, "doc_id", "text").count()
+      val n = Dedup.survivorsIncrementalDelta(idx, batch, "doc_id", "text").full.count()
       Dedup.releaseSignatures()
       bestFold = math.min(bestFold, (System.nanoTime() - t0) / 1e9)
       require(n == corpus.count(), "fold must re-emit the union decision table")
@@ -107,7 +107,7 @@ object MaintSf1Smoke {
     var bestCc = Double.MaxValue
     (1 to 2).foreach { _ =>
       val t0 = System.nanoTime()
-      graft.er.Clustering.incrementalClusters(spark, clusters, batchE).count()
+      graft.er.Clustering.incrementalClustersWithDelta(spark, clusters, batchE).assignment.count()
       bestCc = math.min(bestCc, (System.nanoTime() - t0) / 1e9)
     }
     println(f"[maintsf1] er_clusters_incr fold (min-of-2): $bestCc%.1f s, " +
@@ -134,7 +134,7 @@ object MaintSf1Smoke {
     var bestFull = Double.MaxValue
     (1 to 2).foreach { _ =>
       val t0 = System.nanoTime()
-      val n = Dedup.survivorsFullIncremental(fidx, batchLS, "doc_id", "text").count()
+      val n = Dedup.survivorsIncrementalDelta(fidx, batchLS, "doc_id", "text").full.count()
       Dedup.releaseSignatures()
       bestFull = math.min(bestFull, (System.nanoTime() - t0) / 1e9)
       require(n == corpusLS.count(), "fold must re-emit the union decision table")

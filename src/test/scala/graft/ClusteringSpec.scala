@@ -277,11 +277,11 @@ class ClusteringSpec extends AnyFunSuite {
         val ids = (oldE.flatMap(e => Seq(e._1, e._2)) ++ Seq(0L)).distinct
         val standing = Clustering.assign(spark, ids.toDF("id"), oldE.toDF("a", "b"))
         val broadcastRegime = Clustering
-          .incrementalClusters(spark, standing, newE.toDF("a", "b"))
+          .incrementalClustersWithDelta(spark, standing, newE.toDF("a", "b")).assignment
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         val fallbackRegime = Clustering
-          .incrementalClusters(spark, standing, newE.toDF("a", "b"),
-            broadcastMaxEndpoints = 0L)
+          .incrementalClustersWithDelta(spark, standing, newE.toDF("a", "b"),
+            broadcastMaxEndpoints = 0L).assignment
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(fallbackRegime == broadcastRegime, s"round $round")
         assert(fallbackRegime ==

@@ -26,6 +26,21 @@ class DedupAnnSpec extends AnyFunSuite {
     (base ++ nearDups ++ exact).toDF("doc_id", "text")
   }
 
+  // `d` plus planted containment across a mod-3 split in BOTH directions,
+  // with the (lang, source) block columns the containment tier needs
+  private def withPlantedContainment(d: org.apache.spark.sql.DataFrame) = {
+    val xs = (0 until 40).map("x" + _)
+    val vs = (0 until 40).map("v" + _)
+    val extra = Seq(
+      (4000L, xs.mkString(" ")),          // standing container (mod 3 = 1)
+      (4002L, xs.take(10).mkString(" ")), // BATCH victim (mod 3 = 0)
+      (4008L, vs.mkString(" ")),          // BATCH container (mod 3 = 0)
+      (4010L, vs.take(10).mkString(" "))) // standing victim (mod 3 = 2)
+      .toDF("doc_id", "text")
+    d.unionByName(extra)
+      .withColumn("lang", lit("en")).withColumn("source", lit("web"))
+  }
+
   test("exact dedup groups find planted exact duplicates, keep-min survivor") {
     val d = docs(80)
     val g = Dedup.exactGroups(d, "doc_id", "text")
@@ -263,7 +278,7 @@ class DedupAnnSpec extends AnyFunSuite {
     val idx = Dedup.buildSurvivorIndex(standing, "doc_id", "text")
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val got = table(Dedup.survivorsIncremental(idx, batch, "doc_id", "text"))
+    val got = table(Dedup.survivorsIncrementalDelta(idx, batch, "doc_id", "text").full)
     val want = table(Dedup.survivors(d, "doc_id", "text"))
     assert(got.size === want.size, s"row counts differ: ${got.size} vs ${want.size}")
     assert(got === want)
@@ -283,7 +298,7 @@ class DedupAnnSpec extends AnyFunSuite {
     val standing = Seq((10L, "zeta eta theta unique document")).toDF("doc_id", "text")
     val batch = Seq((5L, "zeta eta theta unique document")).toDF("doc_id", "text")
     val idx = Dedup.buildSurvivorIndex(standing, "doc_id", "text")
-    val got = Dedup.survivorsIncremental(idx, batch, "doc_id", "text")
+    val got = Dedup.survivorsIncrementalDelta(idx, batch, "doc_id", "text").full
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
     // standing doc 10 WAS its own keeper; the smaller-id batch duplicate
     // takes over, flipping 10 to a dropped exact duplicate
@@ -323,25 +338,16 @@ class DedupAnnSpec extends AnyFunSuite {
   }
 
   test("containment-aware incremental fold equals batch fused survivors over the union") {
-    // round-6: FullSurvivorIndex maintains all THREE edge tiers across a
-    // fold. Planted cross-split containment in BOTH directions (the two
+    // round-6: the containment tier maintains all THREE edge tiers across
+    // a fold. Planted cross-split containment in BOTH directions (the two
     // probe paths), on top of docs(80)'s cross-split exact + near dups.
-    val xs = (0 until 40).map("x" + _)
-    val vs = (0 until 40).map("v" + _)
-    val extra = Seq(
-      (4000L, xs.mkString(" ")),          // standing container (mod 3 = 1)
-      (4002L, xs.take(10).mkString(" ")), // BATCH victim (mod 3 = 0)
-      (4008L, vs.mkString(" ")),          // BATCH container (mod 3 = 0)
-      (4010L, vs.take(10).mkString(" "))) // standing victim (mod 3 = 2)
-      .toDF("doc_id", "text")
-    val d = docs(80).unionByName(extra)
-      .withColumn("lang", lit("en")).withColumn("source", lit("web"))
+    val d = withPlantedContainment(docs(80))
     val standing = d.where(pmod(col("doc_id"), lit(3)) =!= 0)
     val batch = d.where(pmod(col("doc_id"), lit(3)) === 0)
     val fidx = Dedup.buildFullSurvivorIndex(standing, "doc_id", "text")
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val got = table(Dedup.survivorsFullIncremental(fidx, batch, "doc_id", "text"))
+    val got = table(Dedup.survivorsIncrementalDelta(fidx, batch, "doc_id", "text").full)
     val want = table(Dedup.survivors(d, "doc_id", "text",
       containmentPairs = Some(graft.queries.Queries.containmentPairs(d))))
     assert(got.size === want.size, s"row counts differ: ${got.size} vs ${want.size}")
@@ -353,43 +359,77 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(got(4010L) === ((4008L, "contained")), s"standing victim: ${got(4010L)}")
     assert(got(4000L) === ((4000L, "keep")))
     assert(got(4008L) === ((4008L, "keep")))
-    // the reuseCore path (one physical LSH index, containment-aware
+    // the withContainment path (one physical LSH index, containment-aware
     // clusters recomputed from the at-rest frames) is result-identical
-    val fidx2 = Dedup.buildFullSurvivorIndex(standing, "doc_id", "text",
-      reuseCore = Some(Dedup.buildSurvivorIndex(standing, "doc_id", "text")))
-    val got2 = table(Dedup.survivorsFullIncremental(fidx2, batch, "doc_id", "text"))
-    assert(got2 === want, "reuseCore fold diverged from the fresh-build fold")
-    // parameter drift fails loudly (the NearPairTable rule)
-    assertThrows[IllegalArgumentException] {
-      Dedup.buildFullSurvivorIndex(standing, "doc_id", "text", nHashes = 32,
-        reuseCore = Some(Dedup.buildSurvivorIndex(standing, "doc_id", "text")))
-    }
+    val fidx2 = Dedup.withContainment(
+      Dedup.buildSurvivorIndex(standing, "doc_id", "text"), standing, "doc_id", "text")
+    val got2 = table(Dedup.survivorsIncrementalDelta(fidx2, batch, "doc_id", "text").full)
+    assert(got2 === want, "withContainment fold diverged from the fresh-build fold")
   }
 
   test("incremental fold emits a batch-scale changed set; passthrough view equals batch survivors") {
     // round-7 (round-6 verdict item 3): the fold's OUTPUT volume must
     // track the batch — changed rows only, with every untouched standing
     // row passed through from the index's standing decision table.
-    val d = docs(120)
+    // Run over the plain index and both containment kinds (bootstrapped
+    // with the tier, and added to the plain index), the containment
+    // kinds against batch survivors with the union's containment pairs.
+    val d = withPlantedContainment(docs(120))
     val standing = d.where(pmod(col("doc_id"), lit(3)) =!= 0)
     val batch = d.where(pmod(col("doc_id"), lit(3)) === 0)
-    val idx = Dedup.buildSurvivorIndex(standing, "doc_id", "text")
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val delta = Dedup.survivorsIncrementalDelta(idx, batch, "doc_id", "text")
-    val full = table(delta.full)
-    val want = table(Dedup.survivors(d, "doc_id", "text"))
-    assert(full === want, "passthrough view diverges from batch survivors")
-    val changed = table(delta.changed)
-    // the changed set is a strict subset (untouched standing rows passed
-    // through), and every changed row agrees with the full view
-    assert(changed.size < full.size,
-      s"no passthrough: changed=${changed.size} full=${full.size}")
-    changed.foreach { case (k, v) => assert(full(k) === v, s"changed row $k") }
-    // untouched rows come verbatim from the standing decisions
-    val standingDecisions = table(idx.decisions)
-    (full.keySet -- changed.keySet).foreach { k =>
-      assert(standingDecisions(k) === full(k), s"passthrough row $k drifted")
+    val plain = Dedup.buildSurvivorIndex(standing, "doc_id", "text")
+    val batchPlain = table(Dedup.survivors(d, "doc_id", "text"))
+    val batchFull = table(Dedup.survivors(d, "doc_id", "text",
+      containmentPairs = Some(graft.queries.Queries.containmentPairs(d))))
+    Seq(
+      ("plain", plain, batchPlain),
+      ("full", Dedup.buildFullSurvivorIndex(standing, "doc_id", "text"), batchFull),
+      ("withContainment",
+        Dedup.withContainment(plain, standing, "doc_id", "text"), batchFull)
+    ).foreach { case (kind, idx, want) =>
+      val delta = Dedup.survivorsIncrementalDelta(idx, batch, "doc_id", "text")
+      val full = table(delta.full)
+      assert(full === want, s"$kind: passthrough view diverges from batch survivors")
+      val changed = table(delta.changed)
+      // the changed set is a strict subset (untouched standing rows passed
+      // through), and every changed row agrees with the full view
+      assert(changed.size < full.size,
+        s"$kind: no passthrough: changed=${changed.size} full=${full.size}")
+      changed.foreach { case (k, v) => assert(full(k) === v, s"$kind: changed row $k") }
+      // untouched rows come verbatim from the standing decisions
+      val standingDecisions = table(idx.decisions)
+      (full.keySet -- changed.keySet).foreach { k =>
+        assert(standingDecisions(k) === full(k), s"$kind: passthrough row $k drifted")
+      }
+      // a standing doc newly contained in a batch container is a changed row
+      if (idx.containment.isDefined)
+        assert(changed.get(4010L) === Some((4008L, "contained")),
+          s"$kind: standing victim missing from the changed set: ${changed.get(4010L)}")
+    }
+  }
+
+  test("every frame a bootstrap caches is one of the index's frames") {
+    // a cached frame outside idx.frames is never unpersisted by a caller
+    // releasing the index (the session memos, the benchmark's setup)
+    val d = withPlantedContainment(docs(40))
+    def orphans(build: (org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =>
+        Dedup.SurvivorIndex): Seq[org.apache.spark.sql.DataFrame] = {
+      val seen = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
+      val idx = build { df => seen += df; df.persist() }
+      val out = seen.filterNot(f => idx.frames.exists(_ eq f)).toSeq
+      seen.foreach(_.unpersist(false))
+      out
+    }
+    val plain = Dedup.buildSurvivorIndex(d, "doc_id", "text")
+    Seq(
+      "plain" -> orphans(c => Dedup.buildSurvivorIndex(d, "doc_id", "text", cache = c)),
+      "full" -> orphans(c => Dedup.buildFullSurvivorIndex(d, "doc_id", "text", cache = c)),
+      "withContainment" ->
+        orphans(c => Dedup.withContainment(plain, d, "doc_id", "text", cache = c))
+    ).foreach { case (kind, o) =>
+      assert(o.isEmpty, s"$kind: ${o.size} cached frame(s) not in idx.frames")
     }
   }
 
@@ -415,10 +455,10 @@ class DedupAnnSpec extends AnyFunSuite {
     val fidx =
       try Dedup.buildFullSurvivorIndex(standing, "doc_id", "text", maxPosting = 3)
       finally System.setErr(oldErr)
-    assert(fidx.hotPostingCount > 0, "hot posting key not detected")
+    assert(fidx.containment.get.hotPostingCount > 0, "hot posting key not detected")
     assert(new String(errBuf.toByteArray, "UTF-8").contains("trimmed to the hash-smallest"),
       "bootstrap did not log the trimmed census")
-    val postingSizes = fidx.contFull.groupBy("lang", "source", "tok")
+    val postingSizes = fidx.containment.get.contFull.groupBy("lang", "source", "tok")
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("c"))
       .agg(org.apache.spark.sql.functions.max("c")).head().getLong(0)
@@ -429,18 +469,18 @@ class DedupAnnSpec extends AnyFunSuite {
     // decision row per doc
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val got = table(Dedup.survivorsFullIncremental(fidx, victim, "doc_id", "text"))
+    val got = table(Dedup.survivorsIncrementalDelta(fidx, victim, "doc_id", "text").full)
     assert(got.size === 12, s"one row per doc expected, got ${got.size}")
     assert(got(9002L) === ((9000L, "contained")), s"rare-token victim: ${got(9002L)}")
 
     // default cap: exact regime (no trimming), fold equals batch fused
     // survivors over the union
     val fidxD = Dedup.buildFullSurvivorIndex(standing, "doc_id", "text")
-    assert(fidxD.hotPostingCount === 0L)
+    assert(fidxD.containment.get.hotPostingCount === 0L)
     val all = standing.unionByName(victim)
     val want = table(Dedup.survivors(all, "doc_id", "text",
       containmentPairs = Some(graft.queries.Queries.containmentPairs(all))))
-    assert(table(Dedup.survivorsFullIncremental(fidxD, victim, "doc_id", "text")) === want)
+    assert(table(Dedup.survivorsIncrementalDelta(fidxD, victim, "doc_id", "text").full) === want)
   }
 
   test("curate_pipeline: staged verdicts compose the three gated stages consistently") {

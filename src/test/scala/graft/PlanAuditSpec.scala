@@ -405,7 +405,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val standing = spark.range(0, 10000)
       .select(col("id"), (col("id") - col("id") % 2).as("cluster"))
     val batch = Seq((1L, 2L), (5L, 9998L), (20001L, 3L)).toDF("a", "b")
-    val p = plan(graft.er.Clustering.incrementalClusters(spark, standing, batch))
+    val p = plan(graft.er.Clustering.incrementalClustersWithDelta(spark, standing, batch).assignment)
     // the contracted-graph CC is materialized inside the call; the
     // surviving relabel plan touches the assignment table twice, both
     // times probing a broadcast batch-side build — any sort-merge or
